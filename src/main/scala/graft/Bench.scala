@@ -116,7 +116,10 @@ object Bench {
     }
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + f"$v%.3f" }
       .mkString("{", ",", "}")
-    val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
+    // failed entries carry the -1.0 sentinel: keep them OUT of the total
+    // (summing it would make each failure look 1 s faster); `failed`
+    // below reports how many were left out
+    val total = results.map(_._2).filter(_ >= 0).sum
     // per-query map on its own line (long), then the small parseable total
     // object LAST: the driver tails stdout, and one giant line used to push
     // the parseable object out of the tail window (VERDICT r1 item 4)

@@ -25,19 +25,15 @@ object Engine {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Per-process warehouse for managed tables (bucketed layouts, DDL).
-    * The default `./spark-warehouse` is shared by every JVM launched from
-    * the repo root, and [[Layout.resetManagedTable]] deletes a table's
-    * directory before re-creating it — two concurrent graft processes
-    * (e.g. Verify and PlanSweep) would clobber each other's
-    * `graft_*_b64` writes mid-flight. A pid-keyed tmp dir gives each JVM
-    * its own namespace; the in-memory catalog already forgets managed
-    * tables at exit, so nothing ever legitimately reads another process's
-    * warehouse. Override with SPARK_GRAFT_WAREHOUSE to pin a location. */
-  lazy val warehouseDir: String = sys.env.getOrElse("SPARK_GRAFT_WAREHOUSE", {
+  /** A pid-keyed directory under `java.io.tmpdir`, deleted at JVM exit.
+    * Directories the default layout would share between every JVM launched
+    * from the repo root get one of these instead, so two concurrent graft
+    * processes (e.g. Verify and PlanSweep) never clobber each other's
+    * files mid-flight, and a checkout anywhere writes only under the
+    * process's own temp area. */
+  private def processDir(prefix: String): String = {
     val d = new java.io.File(
-      sys.props("java.io.tmpdir"),
-      s"graft-warehouse-${ProcessHandle.current().pid()}")
+      sys.props("java.io.tmpdir"), s"$prefix-${ProcessHandle.current().pid()}")
     Runtime.getRuntime.addShutdownHook(new Thread(() => {
       def rm(f: java.io.File): Unit = {
         if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
@@ -46,7 +42,26 @@ object Engine {
       rm(d)
     }))
     d.getAbsolutePath
-  })
+  }
+
+  /** Per-process warehouse for managed tables (bucketed layouts, DDL).
+    * The default `./spark-warehouse` is shared by every JVM launched from
+    * the repo root, and [[Layout.resetManagedTable]] deletes a table's
+    * directory before re-creating it; the in-memory catalog already
+    * forgets managed tables at exit, so nothing ever legitimately reads
+    * another process's warehouse. Override with SPARK_GRAFT_WAREHOUSE to
+    * pin a location. */
+  lazy val warehouseDir: String =
+    sys.env.getOrElse("SPARK_GRAFT_WAREHOUSE", processDir("graft-warehouse"))
+
+  /** Per-process scratch area for the files contract entries write and
+    * read back (source/sink round trips, streaming checkpoints). */
+  lazy val tmpDir: String = processDir("graft-tmp")
+
+  /** The [[tmpDir]] subdirectory an entry tagged `tag` uses for input
+    * `dir`: one per (tag, dir), so entries over two inputs never share. */
+  def scratchDir(tag: String, dir: String): String =
+    s"$tmpDir/${tag}_${dir.replaceAll("[^a-zA-Z0-9]", "_")}"
 
   def session(master: String = "local[32]"): SparkSession = {
     val b = SparkSession.builder()
@@ -100,22 +115,6 @@ object Engine {
     if (!em.extraOptimizations.contains(BroadcastSemiJoinRewrite))
       em.extraOptimizations = em.extraOptimizations :+ BroadcastSemiJoinRewrite
     s
-  }
-
-  /** Read `events.parquet` with a TimestampType `ts`, whatever the file's
-    * physical event-time layout. The driver has shipped two layouts so far
-    * (TESTDATA.md history): TIMESTAMP(NANOS), which Spark's reader only
-    * admits as a raw long, and plain timestamp[us] with no timezone, which
-    * surfaces as TIMESTAMP_NTZ. Hard-coding either assumption breaks —
-    * loudly (analyzer error) on the batch path, or *silently* (µs values
-    * long-coerced then div 1000 → windows in 1970) when a hard-coded
-    * read-schema overrides the footer. So: always read with the file's own
-    * schema, then normalize by what we actually got.
-    */
-  def readEvents(spark: SparkSession, p: String): DataFrame = {
-    // harmless when ts is already a timestamp; required to admit nanos files
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    normalizeTs(spark.read.parquet(p))
   }
 
   /** Schema-conditional `ts` normalization to session-TZ TimestampType.
@@ -185,7 +184,7 @@ object Engine {
     val actual = df.schema.map(f => f.name -> f.dataType.simpleString)
     expectedSchemas.get(t).foreach { exp =>
       val guidance = " — testdata was regenerated with a new physical " +
-        "layout; normalize it in Engine (readEvents/normalizeTs pattern) " +
+        "layout; normalize it in Queries.T (the events/normalizeTs pattern) " +
         "or update Engine.expectedSchemas after auditing every reader. " +
         "See TESTDATA.md drift history."
       if (actual.map(_._1) != exp.map(_._1))
@@ -205,16 +204,15 @@ object Engine {
   }
 
   /** Register every testdata table found under `sfDir` as a temp view.
-    * `events` goes through [[readEvents]] (schema-conditional `ts`); every
-    * table is schema-audited, and the per-table fingerprints are logged
-    * once per prepare so a round artifact records what the engine saw. */
+    * Views are read through [[Queries.T]], the same path the DataFrame
+    * entries use (schema-conditional `events.ts`, schema inferred once per
+    * session); every table is schema-audited, and the per-table
+    * fingerprints are logged once per prepare so a round artifact records
+    * what the engine saw. */
   def registerTables(spark: SparkSession, sfDir: String): Unit = {
     val prints = tableNames.flatMap { t =>
-      val p = s"$sfDir/$t.parquet"
-      if (new java.io.File(p).exists()) {
-        val df =
-          if (t == "events") readEvents(spark, p)
-          else spark.read.parquet(p)
+      if (new java.io.File(s"$sfDir/$t.parquet").exists()) {
+        val df = Queries.T(spark, sfDir, t)
         val fp = auditSchema(t, df)
         df.createOrReplaceTempView(t)
         Some(s"$t=$fp")
@@ -301,9 +299,24 @@ object Engine {
     out
   }
 
-  /** Postfix syntax for [[ckpt]]: `df.graftCkpt()`. */
+  /** Temp views registered by [[ckptView]], with their session — the
+    * views [[reclaim]] drops together with the blocks they read. */
+  private val ownedViews =
+    java.util.Collections.synchronizedList(new java.util.ArrayList[(SparkSession, String)]())
+
+  /** [[ckpt]] `df` and register it as temp view `name`. After the next
+    * [[reclaim]] the view would only point at freed blocks, so reclaim
+    * drops it too. */
+  def ckptView(df: DataFrame, name: String): Unit = {
+    ckpt(df).createOrReplaceTempView(name)
+    ownedViews.add((df.sparkSession, name)); ()
+  }
+
+  /** Postfix syntax for [[ckpt]] and [[ckptView]]: `df.graftCkpt()`,
+    * `df.graftCkptView("name")`. */
   implicit class GraftCkptOps(private val df: DataFrame) extends AnyVal {
     def graftCkpt(reliable: Boolean = false): DataFrame = ckpt(df, reliable)
+    def graftCkptView(name: String): Unit = ckptView(df, name)
   }
 
   def reclaim(spark: SparkSession): Unit = {
@@ -318,6 +331,12 @@ object Engine {
       snap
     }
     ids.forEach(id => persistent.get(id).foreach(_.unpersist(blocking = false)))
+    val views = ownedViews.synchronized {
+      val snap = new java.util.ArrayList[(SparkSession, String)](ownedViews)
+      ownedViews.clear()
+      snap
+    }
+    views.forEach { case (s, v) => s.catalog.dropTempView(v); () }
     // run-to-completion streaming results (q88/q95 memory sinks) live in
     // the per-stream CLONED session (Surface.withStatePartitions) and are
     // released when the entry's result DataFrame is dropped — nothing to

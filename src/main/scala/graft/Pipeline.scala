@@ -687,8 +687,8 @@ object Pipeline {
          |WHERE round(len(list_intersect(x.h, y.h)) / len(list_distinct(x.h || y.h)), 6) >= 0.6
          |ORDER BY da, db""".stripMargin
     e("q44_dedup_minhash_lsh", duck) { (s, dir) =>
-      s.sql(groupsSpark).graftCkpt().createOrReplaceTempView("q44_g")
-      s.sql(hsSigSpark).graftCkpt().createOrReplaceTempView("q44_sig")
+      s.sql(groupsSpark).graftCkptView("q44_g")
+      s.sql(hsSigSpark).graftCkptView("q44_sig")
       s.sql(contentPairsSpark(broadcastVerify(s))).graftCkpt()
         .createOrReplaceTempView("q44_cp")
       s.sql(expandSpark(expandCfg(s, dir)))
@@ -813,9 +813,9 @@ object Pipeline {
          |WHERE bit_count(xor(a.sh, b.sh)) <= 8
          |ORDER BY da, db""".stripMargin
     e("q45_dedup_simhash", duck) { (s, dir) =>
-      s.sql(simhashGroupsSql).graftCkpt().createOrReplaceTempView("q45_g")
-      s.sql(simhashSketchSql).graftCkpt().createOrReplaceTempView("q45_s")
-      s.sql(simhashContentPairSql).graftCkpt().createOrReplaceTempView("q45_cp")
+      s.sql(simhashGroupsSql).graftCkptView("q45_g")
+      s.sql(simhashSketchSql).graftCkptView("q45_s")
+      s.sql(simhashContentPairSql).graftCkptView("q45_cp")
       s.sql(simhashExpandSql(expandCfg(s, dir)))
     }
   }
@@ -848,11 +848,11 @@ object Pipeline {
          |${ngramPairsDuck("g")}
          |ORDER BY da, db""".stripMargin
     e("q46_dedup_ngram_jaccard", duck) { (s, dir) =>
-      s.sql(ngramGroupsSpark).graftCkpt().createOrReplaceTempView("q46_g")
+      s.sql(ngramGroupsSpark).graftCkptView("q46_g")
       // px materialized once (round 16): the stage-3 self-join references
       // px twice, and Catalyst's CTE inlining recomputed the whole
       // stage-1-2 pipeline per side — see [[ngramPxSelectSql]]
-      s.sql(ngramPxSelectSql("q46_g")).graftCkpt().createOrReplaceTempView("q46_px")
+      s.sql(ngramPxSelectSql("q46_g")).graftCkptView("q46_px")
       s.sql(ngramPairsFromPxSpark("q46_px", "q46_g", expandCfg(s, dir),
         broadcastVerify(s)) + "\nORDER BY da, db")
     }
@@ -1010,8 +1010,8 @@ object Pipeline {
              "selfcos >= 0.4", cfg)}) u
          |ORDER BY va, vb""".stripMargin
     e("q47_dedup_embedding_cosine", naive(dotDuck)) { (s, dir) =>
-      s.sql(groupsSql(gridCell(s), gridFloor(s))).graftCkpt().createOrReplaceTempView("q47_g")
-      s.sql(contentPairsSql).graftCkpt().createOrReplaceTempView("q47_cp")
+      s.sql(groupsSql(gridCell(s), gridFloor(s))).graftCkptView("q47_g")
+      s.sql(contentPairsSql).graftCkptView("q47_cp")
       s.sql(expandSql(expandCfg(s, dir, "embeddings")))
     }
   }
@@ -1173,7 +1173,7 @@ object Pipeline {
     // DuckDB runs the equivalent as one statement (its optimizer shares CTEs).
     e("q85_embedding_sq8",
       q("duck").replace("DEQ_SOURCE", s"(${deqSql("duck")}) deqsrc")) { (s, _) =>
-      s.sql(deqSql("spark")).graftCkpt().createOrReplaceTempView("q85_dv")
+      s.sql(deqSql("spark")).graftCkptView("q85_dv")
       s.sql(q("spark").replace("DEQ_SOURCE", "q85_dv"))
     }
   }
@@ -1391,10 +1391,10 @@ object Pipeline {
         |ORDER BY component""".stripMargin
     e("q66_dedup_components", duck) { (s, _) =>
       import org.apache.spark.sql.functions.{col, explode, lit, min => smin, max => smax, count => scount}
-      s.sql(ngramGroupsSpark).graftCkpt().createOrReplaceTempView("q66_g")
+      s.sql(ngramGroupsSpark).graftCkptView("q66_g")
       // px materialized once, exactly as in q46 (round 16) — the edge set
       // is q46's content pairs, so it inherits the same double-compute fix
-      s.sql(ngramPxSelectSql("q66_g")).graftCkpt().createOrReplaceTempView("q66_px")
+      s.sql(ngramPxSelectSql("q66_g")).graftCkptView("q66_px")
       val contentEdges = s.sql(sparkContentEdges(broadcastVerify(s))).graftCkpt()
       val labels = connectedComponents(contentEdges, "ca", "cb")
       // clique-expand membership: one explode per group, then one aggregate
@@ -1585,9 +1585,9 @@ object Pipeline {
       s"""SELECT min(doc_id) AS rep, count(*) AS cnt,
          |  slice(sort_array(collect_list(doc_id)), 1, 50) AS ids, text
          |FROM documents GROUP BY text""".stripMargin)
-      .graftCkpt().createOrReplaceTempView(s"${prefix}_grp")
+      .graftCkptView(s"${prefix}_grp")
     s.sql(s"SELECT rep, cnt, size(split(text, ' ')) AS dl FROM ${prefix}_grp")
-      .graftCkpt().createOrReplaceTempView(s"${prefix}_dl")
+      .graftCkptView(s"${prefix}_dl")
   }
 
   private val bm25 = {
@@ -1868,7 +1868,7 @@ object Pipeline {
          |LATERAL VIEW explode(g.train_ids) x AS id
          |ORDER BY doc_id""".stripMargin
     e("q84_contamination", duck) { (s, _) =>
-      s.sql(grpSpark).graftCkpt().createOrReplaceTempView("q84_g")
+      s.sql(grpSpark).graftCkptView("q84_g")
       s.sql(expandSpark)
     }
   }

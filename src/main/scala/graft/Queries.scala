@@ -18,11 +18,53 @@ object Queries {
   type Q = (SparkSession, String) => DataFrame
   final case class Entry(name: String, oracle: Option[String], q: Q)
 
-  /** Read a testdata table; `events` needs the schema-conditional `ts`
-    * normalization (see [[Engine.readEvents]]). */
-  def T(s: SparkSession, dir: String, name: String): DataFrame =
-    if (name == "events") Engine.readEvents(s, s"$dir/events.parquet")
-    else s.read.parquet(s"$dir/$name.parquet")
+  /** Read a testdata table: one fresh relation per call (fresh attribute
+    * ids, so self-joins and view overrides behave as with a plain read),
+    * over the schema [[parquetSchema]] inferred once per session.
+    *
+    * `events.parquet` has shipped in two physical event-time layouts
+    * (TESTDATA.md history): TIMESTAMP(NANOS), which Spark's reader only
+    * admits as a raw long, and plain timestamp[us] with no timezone, which
+    * surfaces as TIMESTAMP_NTZ. Hard-coding either breaks — loudly
+    * (analyzer error), or *silently* (µs values long-coerced then div 1000
+    * → windows in 1970) when a hard-coded read-schema overrides the footer.
+    * So events are read with the file's own schema, then normalized by
+    * what we actually got ([[Engine.normalizeTs]]). */
+  def T(s: SparkSession, dir: String, name: String): DataFrame = {
+    val p = s"$dir/$name.parquet"
+    // harmless when ts is already a timestamp; required to admit nanos files
+    if (name == "events") s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val df = s.read.schema(parquetSchema(s, p)).parquet(p)
+    if (name == "events") Engine.normalizeTs(df) else df
+  }
+
+  /** Session confs that change what parquet schema inference returns. */
+  private val inferenceConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.mergeSchema")
+
+  /** Inferred schemas per live session (weak keys, like `Engine.prepared`):
+    * path → (identity, schema). The identity is every file's (path, size,
+    * mtime) plus [[inferenceConfs]], so a rewritten file or a changed conf
+    * is inferred again. */
+  private val schemas = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[SparkSession,
+      java.util.concurrent.ConcurrentHashMap[String, (String, StructType)]]())
+
+  /** The schema `s.read.parquet(path)` would infer. Inference lists the
+    * footers and runs a Spark job (~0.1 s at sf0.01), so it runs once per
+    * (session, path, identity) instead of on every entry call. Only the
+    * schema is kept; file listing and planning stay per call. */
+  def parquetSchema(s: SparkSession, path: String): StructType = {
+    val memo = schemas.computeIfAbsent(s, _ => new java.util.concurrent.ConcurrentHashMap())
+    val id = Layout.dirFingerprint(path) +
+      inferenceConfs.map(k => s.conf.getOption(k).getOrElse("")).mkString("|", "|", "")
+    memo.compute(path, (_, old) =>
+      if (old != null && old._1 == id) old else (id, s.read.parquet(path).schema))._2
+  }
 
   // --- decimal-exact aggregation helpers -----------------------------------
   // Accumulate in decimal (exact: inputs are 2-decimal by construction) but

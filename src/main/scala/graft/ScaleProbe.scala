@@ -157,7 +157,7 @@ object ScaleProbe {
     // only the matching partitions. At 100 TB this is the difference
     // between scanning 2/50 partitions and scanning everything.
     locally {
-      val dppDir = "/root/repo/target/tmp/scaleprobe_dpp"
+      val dppDir = s"${Engine.tmpDir}/scaleprobe_dpp"
       spark.table("lineitem_x16")
         .withColumn("pkey", (col("l_partkey") % 50).cast("int"))
         .write.mode("overwrite").partitionBy("pkey").parquet(dppDir)
@@ -620,7 +620,7 @@ object ScaleProbe {
     * applied to the custom source: a selective range query plans a handful
     * of partitions instead of thousands. */
   private def zmapProbe(spark: SparkSession): Unit = {
-    val dir = "/root/repo/target/tmp/scaleprobe_zmap"
+    val dir = s"${Engine.tmpDir}/scaleprobe_zmap"
     ArrowSource.write(
       spark.range(10L * 1000 * 1000)
         .select(col("id"), (col("id") % 97).as("k"),

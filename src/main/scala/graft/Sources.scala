@@ -9,15 +9,12 @@ import org.apache.spark.sql.types._
   * struct/map scalar surface (SURVEY §2.7 core family).
   *
   * Round-trip queries prove BOTH directions: the sink writes real files
-  * under target/tmp, the source reads them back, and the oracle computes
+  * under [[Engine.tmpDir]], the source reads them back, and the oracle computes
   * the same aggregate straight from the original parquet — so any
   * write- or read-side corruption breaks the hash match.
   */
 object Sources {
   import Queries.{Entry, T, e}
-
-  private def tmpDir(dir: String, tag: String): String =
-    s"/root/repo/target/tmp/${tag}_${dir.replaceAll("[^a-zA-Z0-9]", "_")}"
 
   /** CSV sink → CSV source (header, explicit schema) → aggregate. */
   private val csvRoundtrip = e("q56_csv_roundtrip",
@@ -25,7 +22,7 @@ object Sources {
       |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
       |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
       |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin) { (s, dir) =>
-    val out = tmpDir(dir, "csv")
+    val out = Engine.scratchDir("csv", dir)
     T(s, dir, "lineitem")
       .select(col("l_returnflag"), col("l_quantity"), col("l_extendedprice"))
       .write.mode("overwrite").option("header", "true").csv(out)
@@ -45,7 +42,7 @@ object Sources {
     """SELECT o_orderstatus, COUNT(*) AS n,
       |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
       |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin) { (s, dir) =>
-    val out = tmpDir(dir, "json")
+    val out = Engine.scratchDir("json", dir)
     T(s, dir, "orders")
       .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
       .write.mode("overwrite").json(out)
@@ -66,7 +63,7 @@ object Sources {
       |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
       |FROM orders WHERE o_orderstatus = 'F'
       |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin) { (s, dir) =>
-    val out = tmpDir(dir, "part")
+    val out = Engine.scratchDir("part", dir)
     T(s, dir, "orders")
       .write.mode("overwrite").partitionBy("o_orderstatus").parquet(out)
     s.read.parquet(out)
@@ -89,7 +86,7 @@ object Sources {
       |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price,
       |  CAST(MIN(o_orderkey) AS BIGINT) AS min_key
       |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin) { (s, dir) =>
-    val out = tmpDir(dir, "avro")
+    val out = Engine.scratchDir("avro", dir)
     AvroSource.write(
       T(s, dir, "orders")
         .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice")),
@@ -114,7 +111,7 @@ object Sources {
       |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price,
       |  CAST(MAX(o_orderkey) AS BIGINT) AS max_key
       |FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin) { (s, dir) =>
-    val out = tmpDir(dir, "arrow")
+    val out = Engine.scratchDir("arrow", dir)
     ArrowSource.write(
       T(s, dir, "orders")
         .select(col("o_orderkey"), col("o_orderpriority"), col("o_totalprice")),

@@ -31,10 +31,11 @@ object Streaming {
     * data when the testdata layout changed (nanos-as-long ÷1000 applied to
     * µs values → 1970 windows) — the file's own schema is the only safe
     * source. `nanosAsLong` is set so legacy TIMESTAMP(NANOS) files probe as
-    * long instead of erroring. */
+    * long instead of erroring; the probe shares [[Queries.parquetSchema]]'s
+    * per-session memo with the batch reads. */
   def probeRawSchema(spark: SparkSession, path: String): StructType = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.read.parquet(path).schema
+    Queries.parquetSchema(spark, path)
   }
 
   /** Unbounded file tail over the events table (≙ reference

@@ -294,7 +294,7 @@ object Extras {
         |SELECT rf, min(v) AS wmedian FROM c WHERE cw >= 0.5 * tw
         |GROUP BY rf ORDER BY rf""".stripMargin
     e("q80_weighted_pct_window", duck) { (s, _) =>
-      Engine.ckpt(s.sql(bucketed)).createOrReplaceTempView("q80_b")
+      Engine.ckptView(s.sql(bucketed), "q80_b")
       s.sql(spark_)
     }
   }
@@ -692,8 +692,7 @@ object Extras {
     e("q88_streaming_windows", duck) { (s, dir) =>
       import org.apache.spark.sql.functions.{col, unix_timestamp}
       import org.apache.spark.sql.streaming.Trigger
-      val chk = new java.io.File(
-        s"/root/repo/target/tmp/q88_chk_${dir.replaceAll("[^a-zA-Z0-9]", "_")}")
+      val chk = new java.io.File(Engine.scratchDir("q88_chk", dir))
       if (chk.exists()) deleteRecursively(chk) // fresh run, not a stale-checkpoint resume
       withStatePartitions(s, statePartitions(s)) { cs =>
         val q = Streaming.windowedCounts(Streaming.eventStream(cs, dir))
@@ -955,8 +954,7 @@ object Extras {
     e("q95_stream_stream_join", duck) { (s, dir) =>
       import org.apache.spark.sql.functions.{col, expr, unix_micros}
       import org.apache.spark.sql.streaming.Trigger
-      val chk = new java.io.File(
-        s"/root/repo/target/tmp/q95_chk_${dir.replaceAll("[^a-zA-Z0-9]", "_")}")
+      val chk = new java.io.File(Engine.scratchDir("q95_chk", dir))
       if (chk.exists()) deleteRecursively(chk)
       withStatePartitions(s, statePartitions(s)) { cs =>
         val clicks = Streaming.eventStream(cs, dir)

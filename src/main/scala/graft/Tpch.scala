@@ -139,7 +139,7 @@ object Tpch {
          |FROM supplier JOIN revenue ON s_suppkey = supplier_no
          |WHERE total_revenue = (SELECT max(total_revenue) FROM revenue)
          |ORDER BY s_suppkey""".stripMargin) { (s, _) =>
-      Engine.ckpt(s.sql(revenue)).createOrReplaceTempView("tq15_rev")
+      Engine.ckptView(s.sql(revenue), "tq15_rev")
       s.sql(
         """SELECT s_suppkey, s_name, CAST(total_revenue AS DOUBLE) AS total_revenue
           |FROM supplier JOIN tq15_rev ON s_suppkey = supplier_no
@@ -305,7 +305,7 @@ object Tpch {
         |FROM value_by_part
         |WHERE CAST(pvalue AS DOUBLE) > (SELECT CAST(SUM(pvalue) AS DOUBLE) * 1.5 / COUNT(*) FROM value_by_part)
         |ORDER BY part_value DESC, p_partkey""".stripMargin) { (s, _) =>
-      Engine.ckpt(s.sql(vbp)).createOrReplaceTempView("tq11_vbp")
+      Engine.ckptView(s.sql(vbp), "tq11_vbp")
       s.sql(
         """SELECT p_partkey, CAST(pvalue AS DOUBLE) AS part_value
           |FROM tq11_vbp

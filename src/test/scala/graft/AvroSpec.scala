@@ -11,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class AvroSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = Engine.session("local[4]")
-  private def tmp(tag: String) = s"/root/repo/target/tmp/avro_spec_$tag"
+  private def tmp(tag: String) = s"${Engine.tmpDir}/avro_spec_$tag"
 
   private val schema = StructType(Seq(
     StructField("id", LongType, nullable = false),
