@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.metrics.source.CodegenMetrics
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -91,22 +92,30 @@ object Bench {
       System.err.println(s"[bench] COUNT-ONLY ${countOnly.size} queries: ${countOnly.toSeq.sorted.mkString(",")}")
     val entries = SparkEntry.queries.toSeq.filterNot { case (n, _) => exclude(n) }
     val samples = scala.collection.mutable.Map.empty[String, Vector[Double]]
-    for (_ <- 1 to reps; (name, fn) <- entries) {
-      val t0 = System.nanoTime()
-      val t = try {
-        val df = fn(spark, sfDir)
-        if (countOnly(name)) { df.count(); () }
-        else df.write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      } catch { case e: Throwable =>
-        // a failure must be VISIBLE, not a fast fake result: record a
-        // sentinel, report on stderr, surface a count in the total line
-        if (!failures.contains(name)) failures ::= name
-        System.err.println(s"[bench] $name FAILED: ${e.getMessage.take(200)}")
-        -1.0
+    // classes each rep compiled: a cache miss is one compilation, so a rep
+    // that recompiles the previous rep's classes shows here (stderr only)
+    val compiled = (1 to reps).map { _ =>
+      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      for ((name, fn) <- entries) {
+        val t0 = System.nanoTime()
+        val t = try {
+          val df = fn(spark, sfDir)
+          if (countOnly(name)) { df.count(); () }
+          else df.write.format("noop").mode("overwrite").save()
+          (System.nanoTime() - t0) / 1e9
+        } catch { case e: Throwable =>
+          // a failure must be VISIBLE, not a fast fake result: record a
+          // sentinel, report on stderr, surface a count in the total line
+          if (!failures.contains(name)) failures ::= name
+          System.err.println(s"[bench] $name FAILED: ${e.getMessage.take(200)}")
+          -1.0
+        }
+        samples(name) = samples.getOrElse(name, Vector.empty) :+ t
       }
-      samples(name) = samples.getOrElse(name, Vector.empty) :+ t
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
     }
+    System.err.println(s"[bench] ${Engine.codegenCacheConf}=" +
+      s"${spark.conf.get(Engine.codegenCacheConf)}; classes compiled per rep: ${compiled.mkString(", ")}")
     val results = entries.map { case (name, _) =>
       val times = samples(name)
       // median of even reps = upper median (exact for the intended odd-5)

@@ -20,6 +20,26 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   */
 object Engine {
 
+  /** Spark's generated-class cache: one static, JVM-wide LRU that
+    * `CodeGenerator$` sizes once, from `SQLConf.get`, when it first loads.
+    * Spark's default of 100 entries is below what one pass of graft's
+    * queries needs, so every pass evicted and recompiled the classes the
+    * pass before had compiled. Counted at sf0.01 with an unbounded cache:
+    * one pass over all 124 contract entries compiles ~1400 distinct
+    * classes (1400 under `Verify`, 1395 under `Bench`), and a second pass
+    * in the same session compiles only the ~40–60 whose source differs
+    * per run (mostly the two streaming entries); with 100 entries every
+    * pass compiled ~2000. 3000 is a little over twice the count; the
+    * classes it keeps cost ~11 MB of metaspace.
+    * Set as a JVM system property, only if unset: `SparkConf` loads
+    * `spark.*` system properties when a context starts, so every session
+    * built after this object loads gets it, and a user's `-D` or builder
+    * `.config` value still wins. [[prepare]] warns when a session runs
+    * with less. */
+  val codegenCacheConf = "spark.sql.codegen.cache.maxEntries"
+  val codegenCacheEntries: Int = 3000
+  sys.props.getOrElseUpdate(codegenCacheConf, codegenCacheEntries.toString)
+
   /** Tables the driver generates (TESTDATA.md). */
   val tableNames: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
@@ -254,11 +274,29 @@ object Engine {
         // RewritePredicateSubquery has turned EXISTS into a LeftSemi join
         if (!em.extraOptimizations.contains(BroadcastSemiJoinRewrite))
           em.extraOptimizations = em.extraOptimizations :+ BroadcastSemiJoinRewrite
+        warnSmallCodegenCache(spark)
         prepared.put(spark, sfDir)
         ()
       }
     }
     spark
+  }
+
+  private val codegenCacheWarned = new java.util.concurrent.atomic.AtomicBoolean(false)
+
+  /** Once per JVM: say so when `spark`'s generated-class cache is smaller
+    * than [[codegenCacheEntries]] — its SparkContext started before this
+    * object loaded, or the user set a smaller value. Answers are the same;
+    * repeated queries recompile their classes. */
+  private def warnSmallCodegenCache(spark: SparkSession): Unit = {
+    val n = spark.conf.get(codegenCacheConf)
+    if (n.toLongOption.exists(_ < codegenCacheEntries) &&
+        codegenCacheWarned.compareAndSet(false, true))
+      System.err.println(
+        s"[graft] WARNING: $codegenCacheConf is $n in this session, below graft's " +
+          s"$codegenCacheEntries: repeated queries will recompile their generated " +
+          s"classes (answers are unaffected). Start the SparkContext with " +
+          s"--conf $codegenCacheConf=$codegenCacheEntries.")
   }
 
   /** Free cross-query executor state left behind by a previous contract
