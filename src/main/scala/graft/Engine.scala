@@ -84,39 +84,50 @@ object Engine {
     s"$tmpDir/${tag}_${dir.replaceAll("[^a-zA-Z0-9]", "_")}"
 
   def session(master: String = "local[32]"): SparkSession = {
-    val b = SparkSession.builder()
+    val s = envKnobs(SparkSession.builder()
       .master(master)
       .appName("graft")
       .withExtensions(new GraftExtensions) // functions + HammingJoinRewrite
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.parquet.filterPushdown", "true")
-      .config("spark.sql.warehouse.dir", warehouseDir)
-      // In local mode the ContextCleaner only deletes a dead shuffle's
-      // files once the JVM collects its ShuffleDependency; under a big
-      // low-pressure heap that can take the whole session, so shuffle
-      // files accumulate and evict the input parquet from the page cache
-      // (BASELINE §×1000 suite-context tail). Spark's own periodic-GC
-      // default (30min) is longer than most sessions — make it tunable.
-      .config("spark.cleaner.periodicGC.interval",
-        sys.env.getOrElse("SPARK_GRAFT_PERIODIC_GC", "30min"))
-    // Off-heap Tungsten memory (SPARK_GRAFT_OFFHEAP=48g): execution/agg
-    // buffers move out of the GC'd heap — the long-session remedy at
-    // ×1000 where 600M-row aggregate state churns a 96 GB heap (BASELINE
-    // §×1000 suite-context tail). A cluster deploy sets the same two
-    // confs via spark-submit; pair with a SMALLER -Xmx (JVM_XMX) so
-    // total footprint stays bounded.
-    val s = sys.env.get("SPARK_GRAFT_OFFHEAP").filter(_.nonEmpty)
-      .fold(b) { sz =>
-        b.config("spark.memory.offHeap.enabled", "true")
-          .config("spark.memory.offHeap.size", sz)
-      }
+      .config("spark.sql.warehouse.dir", warehouseDir), defaultPartitions = "32")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     wireSession(s)
+  }
+
+  /** The scale knobs every graft-built session honors ([[session]],
+    * `Bench`, `Verify`); `tools/run_main.sh` presets them for >=1 GB
+    * corpora, and with none set each session keeps its plain defaults.
+    *  - SPARK_GRAFT_SHUFFLE_PARTITIONS (default `defaultPartitions`): at
+    *    ×1000 the 600M-row shuffles need more partitions than cores
+    *    (BASELINE §tq4 matrix: 32→256 partitions is 112→34.5 s because
+    *    the per-task sort working set fits memory again).
+    *  - SPARK_GRAFT_PERIODIC_GC (default Spark's own 30min): in local mode
+    *    the ContextCleaner only deletes a dead shuffle's files once the JVM
+    *    collects its ShuffleDependency; under a big low-pressure heap that
+    *    can take the whole session, so shuffle files accumulate (a
+    *    124-query dump at ×100 filled the disk with 50+ GB) and evict the
+    *    input parquet from the page cache (BASELINE §×1000 suite-context
+    *    tail).
+    *  - SPARK_GRAFT_OFFHEAP (e.g. `48g`, unset = on-heap): off-heap
+    *    Tungsten memory, so execution/agg buffers move out of the GC'd
+    *    heap — the long-session remedy at ×1000 where 600M-row aggregate
+    *    state churns a 96 GB heap. A cluster deploy sets the same two
+    *    confs via spark-submit; pair with a SMALLER -Xmx (JVM_XMX) so
+    *    total footprint stays bounded. */
+  private[graft] def envKnobs(b: SparkSession.Builder,
+      defaultPartitions: String): SparkSession.Builder = {
+    b.config("spark.sql.shuffle.partitions",
+        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", defaultPartitions))
+      .config("spark.cleaner.periodicGC.interval",
+        sys.env.getOrElse("SPARK_GRAFT_PERIODIC_GC", "30min"))
+    sys.env.get("SPARK_GRAFT_OFFHEAP").filter(_.nonEmpty).fold(b) { sz =>
+      b.config("spark.memory.offHeap.enabled", "true")
+        .config("spark.memory.offHeap.size", sz)
+    }
   }
 
   /** Post-build wiring applied to every Engine-built session: the custom

@@ -175,8 +175,8 @@ object HammingJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
   * the right side of a LeftSemi, so no threshold setting ever yields a
   * fact-side-unshuffled semi join natively. The rewrite:
   *
-  *  1. `probe`   = DISTINCT of the left attrs the join condition reads
-  *                 (LA) — a slice of the SMALL side, broadcast;
+  *  1. `probe`   = the left attrs the join condition reads (LA) — a
+  *                 projected slice of the SMALL side, broadcast as is;
   *  2. `matched` = DISTINCT LA tuples that find a partner:
   *                 `huge ⋈ broadcast(probe)` on the ORIGINAL condition —
   *                 the fact table is consumed MAP-SIDE, never shuffled;
@@ -210,23 +210,7 @@ object HammingJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
   */
 object BroadcastSemiJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
   val EnabledConf = "spark.graft.semiBroadcastRewrite.enabled"
-  val ThresholdConf = "spark.graft.semiBroadcastRewrite.threshold"
   val RatioConf = "spark.graft.semiBroadcastRewrite.ratio"
-  val LeftRatioConf = "spark.graft.semiBroadcastRewrite.leftRatio"
-  /** Whether step 1 DISTINCTs the probe slice before broadcasting it.
-    * `false` broadcasts the projected slice directly — one fewer blocking
-    * shuffle before the fact-side map join can start, and the
-    * [[thresholdBytes]] guard already sizes the NON-distinct slice so the
-    * broadcast budget is unchanged either way; duplicates (rare: probe
-    * attrs are usually the small side's key) only inflate the inner
-    * join's input to `matched`, whose map-side partial agg collapses them
-    * again. Default `false`, set by the ×1000 A/B (round 10, fresh JVM ×3
-    * reps on tq4's shape, BASELINE §tq4 matrix): steady state is a tie
-    * (11.1 s vs 11.2 s) but the non-distinct plan is ~2.3 s faster on the
-    * cold first run (16.9 s vs 19.2 s) — the regime a run-once scan job
-    * lives in. Set `true` to restore the distinct-probe step when probe
-    * attrs carry heavy duplication NOT already bounded by the size guard. */
-  val DistinctProbeConf = "spark.graft.semiBroadcastRewrite.distinctProbe"
 
   /** Runtime-sized broadcast budget for the probe slice (VERDICT r6 #1):
     * 1/16 of the driver heap, capped at 8 GB. local[32]@96g → 6 GB (the
@@ -254,8 +238,6 @@ object BroadcastSemiJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
         val la = left.output.filter(cond.references.contains)
         val probeSlice = Project(la, left)
         lazy val probeSize = probeSlice.stats.sizeInBytes
-        lazy val threshold = BigInt(
-          conf.getConfString(ThresholdConf, thresholdBytes.toString).toLong)
         lazy val ratio = conf.getConfString(RatioConf, "1").toDouble
         // "is the fact side huge" must come from the largest LEAF scan
         // under the right subtree, not right.stats: size-only estimation
@@ -265,30 +247,36 @@ object BroadcastSemiJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
         lazy val rightFactSize = right.collectLeaves()
           .map(_.stats.sizeInBytes).foldLeft(BigInt(0))(_ max _)
         // The rewrite computes `left` TWICE (probe slice + rebuild), so it
-        // only pays when the right FACT side dominates the left's own
-        // scans. tq21's EXISTS has lineitem on BOTH sides (left is a
+        // only pays when the right FACT side is at least 2× the left's own
+        // largest scan. tq21's EXISTS has lineitem on BOTH sides (left is a
         // 4-way join over it): firing there duplicated the join chain for
         // a 6× regression at sf0.1, while the semi shape it exists for
         // (tq4: filtered orders ⋉ lineitem) has a left leaf ~3.5× smaller
         // than the fact at every scale ladder decade.
         lazy val leftFactSize = left.collectLeaves()
           .map(_.stats.sizeInBytes).foldLeft(BigInt(0))(_ max _)
-        lazy val leftRatio = conf.getConfString(LeftRatioConf, "2").toDouble
         val fire =
           splitConjunctivePredicates(cond).exists(cleanEquiConjunct(_, left, right)) &&
             la.nonEmpty && la.forall(a => RowOrdering.isOrderable(a.dataType)) &&
             conf.autoBroadcastJoinThreshold > 0 &&
             rightFactSize > conf.autoBroadcastJoinThreshold &&
-            probeSize <= threshold &&
+            probeSize <= thresholdBytes &&
             BigDecimal(rightFactSize) >= BigDecimal(probeSize) * ratio &&
-            BigDecimal(rightFactSize) >= BigDecimal(leftFactSize) * leftRatio
+            rightFactSize >= leftFactSize * 2
         if (!fire) j
         else {
-          val probe =
-            if (conf.getConfString(DistinctProbeConf, "false") == "true")
-              Aggregate(la, la, probeSlice)
-            else probeSlice
-          val inner = Join(right, probe, Inner, Some(cond), bcastRight)
+          // step 1 broadcasts the projected slice WITHOUT a DISTINCT: one
+          // fewer blocking shuffle before the fact-side map join can start,
+          // and thresholdBytes already sizes the non-distinct slice, so the
+          // broadcast budget is the same; duplicates (rare: probe attrs are
+          // usually the small side's key) only inflate the inner join's
+          // input to `matched`, whose map-side partial agg collapses them.
+          // Chosen by the ×1000 A/B (round 10, fresh JVM ×3 reps on tq4's
+          // shape, BASELINE §tq4 matrix): steady state is a tie (11.1 s vs
+          // 11.2 s) but the non-distinct plan is ~2.3 s faster on the cold
+          // first run (16.9 s vs 19.2 s) — the regime a run-once scan job
+          // lives in.
+          val inner = Join(right, probeSlice, Inner, Some(cond), bcastRight)
           val fresh = la.map(a => Alias(a, a.name)())
           val matched = Aggregate(la, fresh, Project(la, inner))
           val rejoin = la.zip(fresh.map(_.toAttribute))

@@ -118,11 +118,11 @@ object Pipeline {
     * what brings the enumeration under the box (>110 GB scratch →
     * ~40 GB, 1441 s). */
   /** Stages 1-2 of the prefix-filter join (gram df order + prefix
-    * postings) as a reusable WITH-prefix: shared verbatim by the
-    * production pair join below and by [[NgramCandProbe]], which counts
-    * the stage-3 enumeration bound Σ_g C(df_px(g), 2) WITHOUT running the
-    * join — the scratch-volume bracketing tool for corpora where the full
-    * join exceeds the box (VERDICT r13 #1: og300). */
+    * postings) as the WITH-prefix of [[ngramCandSql]]. Counting the
+    * stage-3 enumeration bound Σ_g C(df_px(g), 2) over its px, without
+    * running the join, is how scratch volume was bracketed for corpora
+    * where the full join exceeds the box (VERDICT r13 #1: og300; counts
+    * in BASELINE §"q46/q66 at og300: bracketed"). */
   /** The postings ⋈ gram-df join is pinned to SHUFFLE_HASH on the dfreq
     * side (round 16, guide §3.1): left to the estimator, Spark sizes the
     * EXPLODED postings side from the corpus file bytes (blind to the
@@ -133,7 +133,7 @@ object Pipeline {
     * AGGREGATED dict side per partition — no sort, no driver collect,
     * same plan at every scale; dfreq rows are (hash, count) pairs spread
     * uniformly by the 32-bit gram hash, so per-partition build memory is
-    * |distinct grams| / partitions at any corpus. Measured (PxJoinProbe,
+    * |distinct grams| / partitions at any corpus. Measured (OPTIMIZATION_r16.md,
     * alternating reps, 32 cores): og10 1.41/1.42 s default-broadcast →
     * 0.99/1.24 s SHJ; sf0.1 parity-or-better. Output invariant (join
     * strategy only — NgramPassSpec pins the pair sets). */
@@ -199,7 +199,7 @@ object Pipeline {
     * to the linear stages). Materializing px once (graftCkpt) removes the
     * duplicate at every scale; the K-pass runners keep the inline form —
     * their per-pass JVMs would pay the materialization without reusing it
-    * across passes, and their committed pushdown pattern (PassPlanPeek)
+    * across passes, and their committed pushdown pattern (OPTIMIZATION_r16.md)
     * is pinned against the inline plan. Output invariance of the two
     * forms is pinned by NgramPassSpec ("materialized px"). */
   /** Round 17: the PRODUCTION px statement computes the gram document
@@ -210,9 +210,10 @@ object Pipeline {
     * hash build. Row-identical by construction (dfc is the same count,
     * `(dfc, gr)` is a total order within rep since grams are distinct per
     * content): the stage-3 candidate bound Σ_g C(df_px(g),2) matched
-    * EXACTLY under both forms (R17PxProbe: 702,764 at sf0.1 / 76,045,864
-    * at og10), and NgramPassSpec pins the resulting pair sets against the
-    * inline aggregate form. Measured (R17PxProbe, alternating in one JVM):
+    * EXACTLY under both forms (OPTIMIZATION_r17.md: 702,764 at sf0.1 /
+    * 76,045,864 at og10), and NgramPassSpec pins the resulting pair sets
+    * against the inline aggregate form. Measured (OPTIMIZATION_r17.md,
+    * alternating in one JVM):
     * sf0.1 0.83 → 0.39 s, og10 0.84–1.12 → 0.77–0.78 s steady.
     *
     * Scale envelope: WindowExec buffers ONE gram's postings per group —
@@ -326,16 +327,13 @@ object Pipeline {
     * chunk-parallel machinery costs two explicit-count exchanges that are
     * pure overhead at toy scale, where every group fits one chunk anyway
     * (~0.3 s per dedup query at sf0.1); at clone/scale corpora it is what
-    * keeps the 2.5B-row expansions off a single core. Resolution order:
-    *  1. `graft.expand.mode` conf / SPARK_GRAFT_EXPAND_MODE env —
-    *     explicit `plain` or `chunk`;
-    *  2. an explicitly-set `graft.expand.chunk` size implies `chunk`
+    * keeps the 2.5B-row expansions off a single core. Resolution:
+    *  1. an explicitly-set `graft.expand.chunk` size means `chunk`
     *     (a manual chunk size IS a request for the chunked path — this is
     *     what keeps CollapseFirstSpec's invariance test spanning BOTH
-    *     modes with no spec change: its base run takes the plain path,
-    *     its chunk=2/1 runs the chunked one, and equal output across all
-    *     three is asserted);
-    *  3. autodetect: chunked iff the corpus table file at `dir` is
+    *     modes: its base run takes the plain path, its chunk=2/1 runs the
+    *     chunked one, and equal output across all three is asserted);
+    *  2. otherwise autodetect: chunked iff the corpus table file at `dir` is
     *     >= 4 MB — every clone/scale corpus (>= ×10 = ~10× sf0.1's
     *     0.6 MB documents / 0.8 MB embeddings) crosses it, every
     *     sf-scale dir and crafted spec view (no file at all) stays
@@ -359,22 +357,15 @@ object Pipeline {
     else 0L
   }
   private[graft] def expandChunked(s: SparkSession, dir: String, table: String): Boolean = {
-    val (mode, why) = s.conf.getOption("graft.expand.mode")
-      .orElse(sys.env.get("SPARK_GRAFT_EXPAND_MODE")) match {
-      case Some("plain") => (false, "explicit graft.expand.mode=plain")
-      case Some("chunk") => (true, "explicit graft.expand.mode=chunk")
-      case Some(other) => throw new IllegalArgumentException(
-        s"graft.expand.mode must be 'plain' or 'chunk', got '$other'")
-      case None =>
-        if (s.conf.getOption("graft.expand.chunk")
-              .orElse(sys.env.get("SPARK_GRAFT_EXPAND_CHUNK")).isDefined)
-          (true, "explicit chunk size implies chunk mode")
-        else {
-          val bytes = corpusBytes(dir, table)
-          (bytes >= ChunkAutoBytes,
-            s"autodetect: $dir/$table.parquet = $bytes bytes vs $ChunkAutoBytes threshold")
-        }
-    }
+    val (mode, why) =
+      if (s.conf.getOption("graft.expand.chunk")
+            .orElse(sys.env.get("SPARK_GRAFT_EXPAND_CHUNK")).isDefined)
+        (true, "explicit chunk size implies chunk mode")
+      else {
+        val bytes = corpusBytes(dir, table)
+        (bytes >= ChunkAutoBytes,
+          s"autodetect: $dir/$table.parquet = $bytes bytes vs $ChunkAutoBytes threshold")
+      }
     // one line per resolution (ADVICE r12): the autodetect is heuristic, so
     // the resolved mode must be visible in any run's stderr, never silent
     System.err.println(s"[graft] expand mode=${if (mode) "chunk" else "plain"} ($why)")
@@ -589,8 +580,9 @@ object Pipeline {
   // bounded by the answer itself. The verified content pairs are
   // checkpointed so the expansion copies jacc instead of recomputing
   // the array-intersect per emitted row.
-  // (private[graft]: BroadcastSliceProbe rebuilds the sig view to measure
-  // the verify stage's real broadcast bytes — BASELINE §broadcast ceiling.)
+  // (private[graft]: MinhashPassRun and MinhashPassSpec rebuild these
+  // views; the verify stage's measured broadcast bytes are in BASELINE
+  // §broadcast-slice ceiling.)
   private[graft] val minhashGroupsSql =
     """SELECT min(doc_id) AS rep, sort_array(collect_list(doc_id)) AS ids, text
       |FROM documents WHERE size(split(text, ' ')) >= 3
@@ -778,7 +770,7 @@ object Pipeline {
     * SUBQUERY rather than an extra join conjunct, so the join condition
     * keeps the exact `bit_count(^) <= t AND a.rep < b.rep` shape
     * [[HammingJoinRewrite]] pattern-matches — the rewrite still fires
-    * (PassPlanPeek `simhash` prints the banded plan) and the filter sits
+    * (SimhashPassSpec asserts the banded plan) and the filter sits
     * below the join by construction. Every unordered pair lands in
     * exactly one pass via its SMALLER rep. */
   private[graft] def simhashContentPairPassSql(passFilter: String): String =
@@ -923,15 +915,10 @@ object Pipeline {
 
   /** Parallelism floor for the adaptive grid (ADVICE r13): the min
     * sub-group count per label (capped at m_label) when the cell budget
-    * alone would under-parallelize. Default 4 is the round-12 static
-    * grid measured optimal on the 32-core box; a box with a different
-    * core count tunes it via `graft.grid.floor` / SPARK_GRAFT_GRID_FLOOR
-    * alongside [[gridCell]]. Semantics are output-invariant at any G
-    * (CollapseFirstSpec pins invariance across grid shapes). */
-  private[graft] def gridFloor(s: SparkSession): Int =
-    s.conf.getOption("graft.grid.floor")
-      .orElse(sys.env.get("SPARK_GRAFT_GRID_FLOOR"))
-      .map(_.toInt).getOrElse(4)
+    * alone would under-parallelize. 4 is the round-12 static grid
+    * measured optimal on the 32-core box. Semantics are output-invariant
+    * at any G (CollapseFirstSpec pins invariance across grid shapes). */
+  private val GridFloor = 4
 
   private val dedupEmbedding = {
     def naive(dot: (String, String) => String): String =
@@ -1010,7 +997,7 @@ object Pipeline {
              "selfcos >= 0.4", cfg)}) u
          |ORDER BY va, vb""".stripMargin
     e("q47_dedup_embedding_cosine", naive(dotDuck)) { (s, dir) =>
-      s.sql(groupsSql(gridCell(s), gridFloor(s))).graftCkptView("q47_g")
+      s.sql(groupsSql(gridCell(s), GridFloor)).graftCkptView("q47_g")
       s.sql(contentPairsSql).graftCkptView("q47_cp")
       s.sql(expandSql(expandCfg(s, dir, "embeddings")))
     }

@@ -1,10 +1,10 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
+
 /** Automated plan audit over the whole contract corpus: flags the plan
   * smells that matter at 100 TB — cartesian products, exchange storms,
-  * and all-pairs NLJs inside the banded dedup family. Complements
-  * [[PlanAudit]] (detailed formatted plans for headline queries,
-  * including PushedFilters/pruning inspection).
+  * and all-pairs NLJs inside the banded dedup family.
   *
   * Exchange counts are RATCHETED per query against
   * `plan_exchanges.snapshot` (repo root): any query whose physical plan
@@ -13,21 +13,66 @@ package graft
   * threshold (VERDICT r5 #4 — the r5 gate only had the blunt global
   * `>12`). The ratchet applies at the default sf0.01 dir only: relative
   * file sizes legitimately flip broadcast decisions at other scales.
+  * `PlanSweepSpec` runs [[sweep]] in the test suite.
   *
   * Run: `sbt "runMain graft.PlanSweep"` — prints one line per query and a
-  * FAIL line per smell; exit code 1 if any smell found.
+  * BAD line per smell; exit code 1 if any smell found.
   * `sbt "runMain graft.PlanSweep --update"` — rewrite the snapshot from
   * the current plans (use after an INTENTIONAL plan change, then review
   * the snapshot diff in git).
+  * `sbt "runMain graft.PlanSweep --explain [names...]"` — print formatted
+  * physical plans for headline queries instead (the scale audit:
+  * PushedFilters reach the parquet scan, small dims broadcast, aggregates
+  * are partial+final, partitioned reads prune, WholeStageCodegen spans are
+  * wide).
   */
 object PlanSweep {
-  private val defaultSf = "/root/testdata/sf0.01"
+  private[graft] val defaultSf = "/root/testdata/sf0.01"
   private val snapshotPath = "plan_exchanges.snapshot"
+  private val explainDefaults = Seq("q1_agg", "q6_selective_filter", "q3_join_topk",
+    "q5_join_multiway", "q44_dedup_minhash_lsh", "q48_ann_topk_brute",
+    "q58_partitioned_write_prune", "q91_bucketed_join", "q93_asof_join", "q100_kmeans",
+    "q102_ann_lsh")
 
   def main(args: Array[String]): Unit = {
     val sf = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", defaultSf)
-    val update = args.contains("--update")
-    val ratchet = sf == defaultSf
+    val spark = Engine.session("local[4]")
+    val bad =
+      if (args.headOption.contains("--explain")) {
+        val names = if (args.length > 1) args.toSeq.tail else explainDefaults
+        names.foreach { n =>
+          println(s"\n===== $n =====")
+          println(SparkEntry.queries(n)(spark, sf).queryExecution.explainString(
+            org.apache.spark.sql.execution.FormattedMode))
+        }
+        Nil
+      } else if (args.contains("--update")) {
+        val (found, observed) = audit(spark, sf, ratchet = false, println)
+        if (sf == defaultSf) {
+          val w = new java.io.PrintWriter(snapshotPath)
+          // ASCII-only: the PrintWriter uses the platform charset, and a
+          // non-ASCII dash here has already mojibake'd once (VERDICT r7 §6)
+          w.println("# per-query exchange counts at sf0.01 - PlanSweep fails any increase")
+          observed.toSeq.sorted.foreach { case (n, c) => w.println(s"$n $c") }
+          w.close()
+          println(s"SWEEP wrote ${observed.size} entries to $snapshotPath")
+        }
+        found
+      } else sweep(spark, sf, println)
+    spark.stop()
+    if (bad.nonEmpty) sys.exit(1)
+  }
+
+  /** Plan every contract entry at `sf` and return the BAD lines: a smell,
+    * an entry that fails to plan, or — at the default sf0.01 — an
+    * exchange count above `plan_exchanges.snapshot` or a snapshot that no
+    * longer covers exactly the contract's entries. `log` receives every
+    * line, ok and BAD alike. */
+  def sweep(spark: SparkSession, sf: String, log: String => Unit = _ => ()): Seq[String] =
+    audit(spark, sf, ratchet = sf == defaultSf, log)._1
+
+  private def audit(spark: SparkSession, sf: String, ratchet: Boolean,
+      log: String => Unit): (Seq[String], Map[String, Int]) = {
     val snapshot: Map[String, Int] =
       if (new java.io.File(snapshotPath).exists())
         scala.io.Source.fromFile(snapshotPath).getLines()
@@ -35,8 +80,11 @@ object PlanSweep {
           .map { l => val Array(n, c) = l.split("\\s+"); n -> c.toInt }.toMap
       else Map.empty
     val observed = scala.collection.mutable.Map.empty[String, Int]
-    val spark = Engine.session("local[4]")
-    var bad = 0
+    val bad = Seq.newBuilder[String]
+    def report(line: String, isBad: Boolean): Unit = {
+      log(line)
+      if (isBad) bad += line
+    }
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       try {
         val qe = fn(spark, sf).queryExecution
@@ -50,7 +98,7 @@ object PlanSweep {
           // cross join (q11) or a tiny broadcast probe (ANN/IVF assign)
           (cartesian && !Set("q11_cross_join").contains(name)) -> "CartesianProduct",
           (exchanges > 12) -> s"exchange storm ($exchanges)",
-          (ratchet && !update && snapshot.get(name).exists(exchanges > _)) ->
+          (ratchet && snapshot.get(name).exists(exchanges > _)) ->
             s"exchange ratchet: $exchanges > snapshot ${snapshot.getOrElse(name, -1)}",
           // LSH-banded dedup must pair via equi-join on (band, bucket) —
           // an all-pairs nested-loop self-join here is the 100 TB killer
@@ -59,42 +107,31 @@ object PlanSweep {
             "q46_dedup_ngram_jaccard", "q47_dedup_embedding_cosine")
             .contains(name)) -> "all-pairs NLJ in banded dedup"
         ).collect { case (true, s) => s }
-        val flag = if (smells.isEmpty) "ok " else { bad += 1; "BAD" }
-        println(f"SWEEP $flag $name%-30s exch=$exchanges%2d" +
-          (if (bcastNlj) " bnlj" else "") + smells.mkString(" [", ",", "]").replace(" []", ""))
+        report(f"SWEEP ${if (smells.isEmpty) "ok " else "BAD"} $name%-30s exch=$exchanges%2d" +
+          (if (bcastNlj) " bnlj" else "") + smells.mkString(" [", ",", "]").replace(" []", ""),
+          smells.nonEmpty)
       } catch {
         case e: Throwable =>
-          bad += 1
-          println(s"SWEEP ERR $name: ${e.getMessage.take(100)}")
+          report(s"SWEEP ERR $name: ${String.valueOf(e.getMessage).take(100)}", isBad = true)
       }
     }
-    spark.stop()
-    if (ratchet && !update) {
+    if (ratchet) {
       // a query the snapshot knows that no longer exists, or a new query
       // the snapshot doesn't cover, means the snapshot needs a refresh —
       // fail loudly rather than silently un-ratcheting coverage
       (snapshot.keySet -- observed.keySet).toSeq.sorted.foreach { n =>
-        bad += 1; println(s"SWEEP BAD $n in snapshot but not in queries (re-run --update)")
+        report(s"SWEEP BAD $n in snapshot but not in queries (re-run --update)", isBad = true)
       }
       (observed.keySet -- snapshot.keySet).toSeq.sorted.foreach { n =>
-        bad += 1; println(s"SWEEP BAD $n not ratcheted (re-run --update)")
+        report(s"SWEEP BAD $n not ratcheted (re-run --update)", isBad = true)
       }
       // an IMPROVEMENT should also refresh the snapshot, or the gain can
       // silently erode back to the stale ceiling
       observed.foreach { case (n, c) =>
         snapshot.get(n).filter(c < _).foreach(s =>
-          println(s"SWEEP note $n improved $s -> $c (tighten with --update)"))
+          log(s"SWEEP note $n improved $s -> $c (tighten with --update)"))
       }
     }
-    if (update && sf == defaultSf) {
-      val w = new java.io.PrintWriter(snapshotPath)
-      // ASCII-only: the PrintWriter uses the platform charset, and a
-      // non-ASCII dash here has already mojibake'd once (VERDICT r7 §6)
-      w.println("# per-query exchange counts at sf0.01 - PlanSweep fails any increase")
-      observed.toSeq.sorted.foreach { case (n, c) => w.println(s"$n $c") }
-      w.close()
-      println(s"SWEEP wrote ${observed.size} entries to $snapshotPath")
-    }
-    if (bad > 0) sys.exit(1)
+    (bad.result(), observed.toMap)
   }
 }

@@ -413,9 +413,9 @@ object ScaleProbe {
     *               broadcast-join back. The fo CTE inlines twice
     *               (Catalyst), both instances cheap filtered dim scans.
     *
-    * No variant arg: all three run and must return IDENTICAL rows (exit 1
+    * No variant arg: all four run and must return IDENTICAL rows (exit 1
     * otherwise) — the correctness leg, run at sf0.1/×10. With a variant
-    * arg (baseline|preagg|broadcast) only that one runs, REPS times — so
+    * arg (baseline|preagg|broadcast|rule) only that one runs, REPS times — so
     * each timing gets a fresh JVM at ×1000 (heap churn from a prior 600M-
     * row variant inflates successors 3–7×, BASELINE §x1000).
     */
@@ -435,21 +435,13 @@ object ScaleProbe {
            |  ON l_orderkey = o_orderkey AND max_ship > o_orderdate
            |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin)
           .collect().map(_.mkString("|")).toSeq
-      // the optimizer-rule default plan, both probe shapes: "rule" forces
-      // the distinct-probe step-1, "rule-nodistinct" broadcasts the
-      // filtered slice directly (DistinctProbeConf A/B, BASELINE §tq4
-      // matrix). Both run the CONTRACT query — whatever a bare user types.
-      case v @ ("rule" | "rule-nodistinct") =>
-        val saved = scala.util.Try(
-          spark.conf.get(BroadcastSemiJoinRewrite.DistinctProbeConf)).toOption
-        spark.conf.set(BroadcastSemiJoinRewrite.DistinctProbeConf,
-          (v == "rule").toString)
-        try SparkEntry.queries("tq4_order_priority")(spark, sf)
+      // the optimizer-rule default plan: BroadcastSemiJoinRewrite
+      // broadcasts the filtered slice directly (BASELINE §tq4 matrix's
+      // `rule-nodistinct` row). It runs the CONTRACT query — whatever a
+      // bare user types.
+      case "rule" =>
+        SparkEntry.queries("tq4_order_priority")(spark, sf)
           .collect().map(_.mkString("|")).toSeq
-        finally saved match {
-          case Some(x) => spark.conf.set(BroadcastSemiJoinRewrite.DistinctProbeConf, x)
-          case None => spark.conf.unset(BroadcastSemiJoinRewrite.DistinctProbeConf)
-        }
       case "broadcast" => spark.sql(
         s"""WITH fo AS (SELECT o_orderkey, o_orderdate, o_orderpriority
            |            FROM orders WHERE $win),
@@ -467,7 +459,7 @@ object ScaleProbe {
         val reps = sys.env.getOrElse("REPS", "2").toInt
         (1 to reps).foreach(_ => t(s"tq4/$v")(run(v).length.toLong))
       case None =>
-        val res = Seq("baseline", "preagg", "broadcast", "rule", "rule-nodistinct")
+        val res = Seq("baseline", "preagg", "broadcast", "rule")
           .map(v => v -> run(v))
         res.foreach { case (v, rows) => println(s"SCALE tq4/$v -> ${rows.length} rows") }
         val ok = res.map(_._2).distinct.size == 1

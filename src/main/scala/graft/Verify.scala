@@ -45,34 +45,14 @@ object Verify {
       case None => Set.empty
     }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder = SparkSession.builder()
+    // Scale knobs shared with Engine.session (Engine.envKnobs); with none
+    // set, sf0.1 runs keep the plain on-heap session with one shuffle
+    // partition per core.
+    val spark = Engine.envKnobs(SparkSession.builder()
       .master(s"local[$cpus]")
-      // At ×1000 the 600M-row shuffles need more partitions than cores
-      // (BASELINE §tq4 matrix: 32→256 partitions is 112→34.5 s because the
-      // per-task sort working set fits memory again) — same env knob as
-      // Engine.session, defaulting to the driver-protocol cpus value.
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus))
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", Engine.warehouseDir)
-      // Long-session shuffle-file hygiene (same knob as Engine.session):
-      // this deliberately-plain driver-mimic session still needs the
-      // ContextCleaner to learn shuffles are dead, or a 124-query dump at
-      // ×100 accumulates 50+ GB of dead shuffle files under a
-      // low-pressure 96 GB heap (measured this round — the disk filled).
-      .config("spark.cleaner.periodicGC.interval",
-        sys.env.getOrElse("SPARK_GRAFT_PERIODIC_GC", "30min"))
-    // Off-heap Tungsten, same knob as Engine.session (VERDICT r10 #4):
-    // tools/run_main.sh now presets this on >=1 GB corpora so a fresh
-    // scale sweep dumps under the measured-best memory config without
-    // remembering an env var. The driver never sets it — sf0.1 driver
-    // runs keep the plain on-heap session.
-    val spark = sys.env.get("SPARK_GRAFT_OFFHEAP").filter(_.nonEmpty)
-      .fold(builder) { sz =>
-        builder.config("spark.memory.offHeap.enabled", "true")
-          .config("spark.memory.offHeap.size", sz)
-      }
+      .config("spark.sql.warehouse.dir", Engine.warehouseDir), defaultPartitions = cpus)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val metricsOn = sys.env.get("SPARK_GRAFT_METRICS").contains("1")

@@ -96,20 +96,14 @@ class SemiRewriteSpec extends AnyFunSuite {
     assert(df.collect().nonEmpty)
   }
 
-  test("non-distinct probe shape keeps rows identical (DistinctProbeConf A/B)") {
+  test("non-distinct probe shape keeps rows identical") {
     Engine.prepare(spark, sf)
     val sql = "SELECT o_orderpriority, COUNT(*) AS c FROM orders WHERE EXISTS " +
       "(SELECT 1 FROM lineitem WHERE l_orderkey = o_orderkey " +
       "AND l_shipdate > o_orderdate) GROUP BY o_orderpriority"
     val stock = withRewrite(on = false)(rows(spark.sql(sql)))
-    for (dp <- Seq("true", "false")) {
-      val got = withRewrite(on = true) {
-        spark.conf.set(BroadcastSemiJoinRewrite.DistinctProbeConf, dp)
-        try rows(spark.sql(sql))
-        finally spark.conf.unset(BroadcastSemiJoinRewrite.DistinctProbeConf)
-      }
-      assert(got == stock, s"distinctProbe=$dp drifted: $got vs $stock")
-    }
+    val got = withRewrite(on = true)(rows(spark.sql(sql)))
+    assert(got == stock, s"rewritten rows drifted: $got vs $stock")
     assert(stock.nonEmpty)
   }
 
@@ -126,17 +120,10 @@ class SemiRewriteSpec extends AnyFunSuite {
     val sql = "SELECT k, d FROM sl WHERE EXISTS " +
       "(SELECT 1 FROM sr WHERE rk = k AND rd > d)"
     val stock = withRewrite(on = false)(rows(spark.sql(sql)))
-    // both probe shapes: duplicate left rows are the non-distinct probe's
-    // risk case (duplicated broadcast tuples must not duplicate semi output)
-    for (dp <- Seq("true", "false")) {
-      val rewritten = withRewrite(on = true) {
-        spark.conf.set(BroadcastSemiJoinRewrite.DistinctProbeConf, dp)
-        try rows(spark.sql(sql))
-        finally spark.conf.unset(BroadcastSemiJoinRewrite.DistinctProbeConf)
-      }
-      assert(rewritten == stock,
-        s"null semantics drifted (distinctProbe=$dp): $rewritten vs $stock")
-    }
+    // duplicate left rows are the non-distinct probe's risk case
+    // (duplicated broadcast tuples must not duplicate semi output)
+    val rewritten = withRewrite(on = true)(rows(spark.sql(sql)))
+    assert(rewritten == stock, s"null semantics drifted: $rewritten vs $stock")
     // duplicate left rows are preserved (semi keeps multiplicity of left)
     assert(stock == Seq("1|10", "1|10"), s"unexpected baseline: $stock")
   }

@@ -11,8 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * be pairwise disjoint (each unordered pair's smaller rep hashes to
   * one pass). The pass filter lives in an a-side subquery so the
   * HammingJoinRewrite's join-condition pattern still matches — this
-  * spec pins the SEMANTICS either way; PassPlanPeek `simhash` pins the
-  * plan shape. */
+  * spec pins both the semantics and that plan shape. */
 class SimhashPassSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = {
@@ -34,5 +33,12 @@ class SimhashPassSpec extends AnyFunSuite {
     assert(passes.reduce(_ ++ _) === single)
     for (i <- 0 until 3; j <- i + 1 until 3)
       assert(passes(i).intersect(passes(j)).isEmpty, s"passes $i/$j overlap")
+  }
+
+  test("pass filter keeps the banded rewrite: no nested-loop or cartesian join") {
+    val plan = spark.sql(Pipeline.simhashContentPairPassSql("pmod(hash(rep), 3) = 0"))
+      .queryExecution.executedPlan.toString
+    assert(!plan.contains("BroadcastNestedLoopJoin") && !plan.contains("CartesianProduct"),
+      s"HammingJoinRewrite must still fire under the pass filter:\n$plan")
   }
 }
