@@ -471,8 +471,9 @@ object Corpus {
     * occupancy is n/2^bits, so candidate pairs per table are
     * ≈ n²/2^bits·(1/2); pick bits ≈ log2(n / B) for a target bucket size B
     * (B ≈ 64–256 keeps rerank work ≈ n·B, linear in n). The contract
-    * query pins bits=6 for the 2k-vector oracle corpus; ScaleProbe runs
-    * bits=12 on the ×8 corpus to show candidates stay collision-bounded.
+    * query pins bits=6 for the 2k-vector oracle corpus; at bits=12 on the
+    * ×8 corpus candidates stay collision-bounded (BASELINE.md §"Scale
+    * stress").
     *
     * At 100 TB: the sketch table (vec_id, norm, b1, b2) is computed in ONE
     * pass over the corpus (the 2·bits×64 hyperplane matrix rides a
@@ -510,7 +511,8 @@ object Corpus {
   private[graft] def lshSearch(s: SparkSession, sk: DataFrame,
       maxQueryId: Long = 5, topK: Int = 5, view: String = "q102_sk"): DataFrame = {
     // each caller names its own view (ADVICE r5: a shared global view name
-    // coupled q102/q106/ScaleProbe through analysis-time ordering)
+    // coupled q102/q106 and the scale-stress run through analysis-time
+    // ordering)
     sk.createOrReplaceTempView(view)
     s.sql(
       s"""WITH tb AS (

@@ -176,12 +176,13 @@ object Fingerprints {
   // MD5 per character POSITION (~n_chars digests/doc, 2.5B at ×1000), so the
   // obvious optimization was replacing MessageDigest (reset + engineDigest +
   // a fresh 16-byte array per call) with an allocation-free pure-Java
-  // single-block MD5. MEASURED (graft.FpProbe) and rejected: HotSpot
-  // intrinsifies MD5.implCompress, and the intrinsic beats the pure-Java
-  // compression 79 vs 103 ms per 600k grams even paying the per-call
-  // allocations. The ThreadLocal MessageDigest below is the measured floor;
-  // the per-position digest count itself is the oracle contract
-  // (min over i of md5(substr(text,i,4))) and cannot be reduced.
+  // single-block MD5. MEASURED (BASELINE.md §"q53 fingerprint: the MD5
+  // floor") and rejected: HotSpot intrinsifies MD5.implCompress, and the
+  // intrinsic beats the pure-Java compression 79 vs 103 ms per 600k grams
+  // even paying the per-call allocations. The ThreadLocal MessageDigest
+  // below is the measured floor; the per-position digest count itself is
+  // the oracle contract (min over i of md5(substr(text,i,4))) and cannot be
+  // reduced.
   private val md5 = new ThreadLocal[java.security.MessageDigest] {
     override def initialValue(): java.security.MessageDigest =
       java.security.MessageDigest.getInstance("MD5")

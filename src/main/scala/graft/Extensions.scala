@@ -87,13 +87,6 @@ object HammingJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
         : Expression
     }.reduce(BitwiseOr(_, _))
 
-  /** Same band value as SQL text — for probes that measure the rule's
-    * actual candidate sets (ScaleProbe). */
-  private[graft] def bandValSql(col: String, positions: Seq[Int]): String =
-    positions.zipWithIndex.map { case (j, m) =>
-      s"shiftleft(shiftright($col, $j) & 1, $m)"
-    }.mkString(" | ")
-
   /** `bit_count(a ^ b) <= k` (either argument order) with a, b simple long
     * columns from opposite join sides. */
   private def matchConjunct(c: Expression, left: LogicalPlan,

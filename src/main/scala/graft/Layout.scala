@@ -4,9 +4,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
 /** Bucketed physical layout as a first-class engine API (SURVEY §2.4 scale
-  * story, promoted from the q91 contract query / ScaleProbe machinery per
-  * VERDICT r6 #4 — the remedy measured 30× on the tq4 EXISTS shape and 7×
-  * on q3 join+agg at ×1000).
+  * story, promoted from the q91 contract query per VERDICT r6 #4 — the
+  * remedy measured 30× on the tq4 EXISTS shape and 7× on q3 join+agg at
+  * ×1000, BASELINE.md §"Bucketed layout, paid for and measured at ×1000").
   *
   * ≙ the layout decision a 100 TB deploy makes once and amortizes over
   * every subsequent join/aggregation on the key (the reference's

@@ -719,8 +719,9 @@ object Pipeline {
     * runs. Work is ∝ band collisions: each interleaved band carries 6-7
     * signal bits of a 60-bit sketch → ~1/64-1/128 collision for unrelated
     * sketches (a 32-bit sketch was measurably useless here — its 3-4-bit
-    * bands put ~91% of all pairs in some shared bucket; ScaleProbe prints
-    * the measured candidate ratio under the rule's own layout). 4 bands
+    * bands put ~91% of all pairs in some shared bucket; BASELINE.md
+    * §"Scale stress" records the candidate ratio measured under the rule's
+    * own layout). 4 bands
     * would not suffice even for recall: 8 differing bits can spread 2 per
     * band.
     * The sketch table feeds both join sides → eagerly materialized via
@@ -1037,8 +1038,8 @@ object Pipeline {
     * stay O(sqrt(n)); `nprobe` is the recall/latency dial — recall rises
     * monotonically with nprobe (candidate superset ⇒ rank-i similarity is
     * monotone, PipelineSpec) at linear cost in cells scanned. The contract
-    * query pins nprobe=1 (the oracle's shape); ScaleProbe times nprobe 1
-    * vs 2 on the ×8 corpus. */
+    * query pins nprobe=1 (the oracle's shape); BASELINE.md §"Scale stress"
+    * times nprobe 1 vs 2 on the ×8 corpus. */
   private[graft] def annIvfSql(dialect: String, nprobe: Int): String = {
     {
       val dot = if (dialect == "spark") dotSpark _ else dotDuck _

@@ -754,8 +754,9 @@ object Extras {
     }
   }
 
-  /** Bucketed co-located join (SURVEY §2.4 scale story, promoted from
-    * ScaleProbe into the contract): both fact tables written bucketed on
+  /** Bucketed co-located join (SURVEY §2.4 scale story, promoted from the
+    * ×16 scale-stress run, BASELINE.md §"Scale stress", into the
+    * contract): both fact tables written bucketed on
     * the join key (8 buckets, sorted), then joined and aggregated on that
     * key — the lambda asserts the executed plan contains a SortMergeJoin
     * and NO hash-partition Exchange (the only allowed exchange is the final

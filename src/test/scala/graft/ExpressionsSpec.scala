@@ -89,10 +89,10 @@ class ExpressionsSpec extends AnyFunSuite {
   }
 
   test("single-block mini-MD5 ≡ java.security.MessageDigest on random bytes") {
-    // keeps FpProbe's A/B honest: the measured-and-rejected q53 alternative
-    // (round 12 — the JDK intrinsic WON; see the FpProbe scaladoc) must
-    // compute the same first-4-bytes-in-hex-order value on every
-    // (offset, length <= 55) window, or its timing is meaningless
+    // pins the measured-and-rejected q53 alternative (round 12 — the JDK
+    // intrinsic WON; BASELINE.md §"q53 fingerprint"): it must compute the
+    // same first-4-bytes-in-hex-order value on every (offset, length <= 55)
+    // window, or a re-timing on a future JDK is meaningless
     val jdk = java.security.MessageDigest.getInstance("MD5")
     def ref(bytes: Array[Byte], off: Int, len: Int): Long = {
       jdk.reset(); jdk.update(bytes, off, len)
@@ -104,13 +104,55 @@ class ExpressionsSpec extends AnyFunSuite {
     rnd.nextBytes(buf)
     // every length 0..55 at varied offsets, plus dense random windows
     for (len <- 0 to 55; off <- Seq(0, 1, 17, 4096 - len))
-      assert(FpProbe.Md5Mini.first32(buf, off, len) == ref(buf, off, len),
+      assert(Md5Mini.first32(buf, off, len) == ref(buf, off, len),
         s"mini-MD5 diverges at off=$off len=$len")
     for (_ <- 1 to 2000) {
       val len = rnd.nextInt(56)
       val off = rnd.nextInt(4096 - len + 1)
-      assert(FpProbe.Md5Mini.first32(buf, off, len) == ref(buf, off, len),
+      assert(Md5Mini.first32(buf, off, len) == ref(buf, off, len),
         s"mini-MD5 diverges at off=$off len=$len")
     }
+  }
+}
+
+/** Single-block MD5 (RFC 1321), messages ≤ 55 bytes, constants computed
+  * from the spec (K(i) = ⌊|sin(i+1)|·2³²⌋): the allocation-free pure-Java
+  * alternative to the JDK digest that q53's min-gram sketch measured and
+  * rejected (BASELINE.md §"q53 fingerprint": MessageDigest ~79 ms vs this
+  * ~103 ms per 600k grams, because HotSpot intrinsifies MD5). Returns the
+  * first 32 bits of the digest in hex-string order — same contract as
+  * `conv(substr(md5(x),1,8),16,10)`. */
+object Md5Mini {
+  val K: Array[Int] = Array.tabulate(64)(i =>
+    ((math.abs(math.sin(i + 1.0)) * 4294967296.0).toLong & 0xffffffffL).toInt)
+  val S: Array[Int] = Array(7, 12, 17, 22, 5, 9, 14, 20, 4, 11, 16, 23, 6, 10, 15, 21)
+  private val scratch = new ThreadLocal[Array[Int]] {
+    override def initialValue(): Array[Int] = new Array[Int](16)
+  }
+
+  def first32(bytes: Array[Byte], off: Int, len: Int): Long = {
+    require(len <= 55, s"single-block MD5 requires len <= 55, got $len")
+    val m = scratch.get()
+    java.util.Arrays.fill(m, 0)
+    var i = 0
+    while (i < len) { m(i >> 2) |= (bytes(off + i) & 0xff) << ((i & 3) << 3); i += 1 }
+    m(len >> 2) |= 0x80 << ((len & 3) << 3)
+    m(14) = len << 3 // bit length; high word m(15) stays 0 for len <= 55
+    var a = 0x67452301; var b = 0xefcdab89; var c = 0x98badcfe; var d = 0x10325476
+    i = 0
+    while (i < 64) {
+      var f = 0; var g = 0
+      if (i < 16) { f = (b & c) | (~b & d); g = i }
+      else if (i < 32) { f = (d & b) | (~d & c); g = (5 * i + 1) & 15 }
+      else if (i < 48) { f = b ^ c ^ d; g = (3 * i + 5) & 15 }
+      else { f = c ^ (b | ~d); g = (7 * i) & 15 }
+      val tmp = d; d = c; c = b
+      b = b + Integer.rotateLeft(a + f + K(i) + m(g), S(((i >> 4) << 2) | (i & 3)))
+      a = tmp
+      i += 1
+    }
+    // digest byte order is little-endian per word: hex chars 1-8 are the
+    // bytes of (a + a0) lowest-first
+    java.lang.Integer.reverseBytes(a + 0x67452301).toLong & 0xffffffffL
   }
 }

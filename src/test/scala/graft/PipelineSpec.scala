@@ -80,6 +80,38 @@ class PipelineSpec extends AnyFunSuite {
       s"streamed windows must agree with batch: ${streamed.diff(batchRows).take(3)}")
   }
 
+  test("multi-batch file tail: windowed counts over 4 micro-batches equal the batch answer") {
+    // sf0.01 events staged as 4 contiguous event-time ranges (approxQuantile
+    // bounds, a distributed split), written OLDEST FIRST so file mod-time
+    // order matches event time and the 10-minute watermark drops nothing;
+    // one file per trigger makes the stream carry window state across
+    // micro-batches instead of reading the corpus as one batch
+    val sf01 = "/root/testdata/sf0.01"
+    val base = new java.io.File(Engine.tmpDir, "stream_tail")
+    val stage = new java.io.File(base, "in").getAbsolutePath
+    val rawSchema = Streaming.probeRawSchema(spark, s"$sf01/events.parquet")
+    val raw = spark.read.schema(rawSchema).parquet(s"$sf01/events.parquet")
+    val ev = raw.withColumn("__ts_us", Engine.tsMicrosCol(raw))
+    val bounds = ev.stat.approxQuantile("__ts_us", Array(0.25, 0.5, 0.75), 0.001).map(_.toLong)
+    (Long.MinValue +: bounds).zip(bounds :+ Long.MaxValue).foreach { case (lo, hi) =>
+      ev.filter(col("__ts_us") >= lo && col("__ts_us") < hi).drop("__ts_us")
+        .coalesce(1).write.mode("append").parquet(stage)
+    }
+    val q = Streaming.windowedCounts(Engine.normalizeTs(
+        spark.readStream.schema(rawSchema).option("maxFilesPerTrigger", 1).parquet(stage)))
+      .writeStream.format("memory").queryName("wc_tail").outputMode("complete")
+      .option("checkpointLocation", new java.io.File(base, "ckpt").getAbsolutePath)
+      .trigger(Trigger.AvailableNow()).start()
+    q.awaitTermination(120000)
+    val batches = q.recentProgress.count(_.numInputRows > 0)
+    assert(batches >= 2, s"expected a multi-batch stream, got $batches micro-batch(es) with input")
+    val streamed = spark.table("wc_tail").collect().map(_.mkString("|")).sorted.toSeq
+    val batch = Streaming.windowedCounts(Engine.normalizeTs(raw))
+      .collect().map(_.mkString("|")).sorted.toSeq
+    assert(streamed == batch,
+      s"stream != batch: ${streamed.diff(batch).take(3)} / ${batch.diff(streamed).take(3)}")
+  }
+
   test("session_window merges sessions touching at exactly the gap (q94 oracle boundary)") {
     // empirically pins the semantics q94's DuckDB emulation must encode:
     // events exactly 30 minutes apart share a session → a new session

@@ -1,43 +1,45 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.scalatest.funsuite.AnyFunSuite
 import Engine.GraftCkptOps
 
-/** ANN recall-lever audit on a CLUSTERED synthetic corpus (VERDICT r5 #2).
+/** ANN recall levers on a CLUSTERED synthetic corpus.
   *
   * q106 honestly reports ~0 recall on the near-uniform random driver
-  * embeddings — on such data no bucketing scheme can beat chance, so the
-  * recall levers (tables, bits, multiprobe, nprobe) were validated only by
-  * candidate-count probes. This probe builds the corpus shape the levers
-  * exist FOR — tight blobs with OVERLAPPING sibling pairs, so each query's
-  * true top-5 straddles two cells — and measures recall@5 and candidate
-  * volume for every lever setting:
+  * embeddings: on such data no bucketing scheme beats chance, so the
+  * recall levers (tables, bits, multiprobe, nprobe) need the corpus shape
+  * they exist FOR. Tight blobs with OVERLAPPING sibling pairs put each
+  * query's true top-5 across two cells; each lever must lift recall@5
+  * there, or (bits) trade candidate volume for recall:
   *
-  *   - LSH tables 1 -> 2       (union of two independent sketches)
-  *   - LSH bits 12 -> 6        (coarser buckets: recall vs candidates)
+  *   - LSH tables 1 -> 2        (union of two independent sketches)
   *   - LSH single -> multiprobe (flip the min-|margin| bit per table)
-  *   - IVF nprobe 1 -> 2       (probe the runner-up centroid cell)
+  *   - IVF nprobe 1 -> 2        (probe the runner-up centroid cell)
+  *   - LSH bits 12 -> 6         (coarser buckets: recall vs candidates)
   *
   * Corpus: dim 64 (the sketch's hyperplane dimensionality), 20 well-
   * separated super-centers, each split into two sibling sub-blobs whose
   * offset is comparable to the member noise, 50 members per sub-blob
   * (n = 2000, matching sf0.1). IVF cells are the 40 sub-blob labels, so
   * nprobe=1 sees only the query's own sub-blob while its true neighbor
-  * set includes siblings — the production regime where the nprobe dial
-  * earns its keep. Deterministic (fixed seed).
-  *
-  * Run: `sbt "runMain graft.RecallProbe"`; results table lives in
-  * BASELINE.md §recall-levers. Exits 1 unless every lever LIFTS recall
-  * (tables, multiprobe, nprobe) or buys candidate reduction (bits).
-  */
-object RecallProbe {
+  * set includes siblings. Deterministic (fixed seed); the recorded
+  * recall/candidate table is BASELINE.md §"ANN recall levers". The views
+  * live on a fresh `newSession`, so the shared session's `embeddings`
+  * view stays the testdata's. */
+class RecallLeverSpec extends AnyFunSuite {
+
   private val Q = 5 // queries: vec_id < 5, one per distinct sub-blob
 
-  def main(args: Array[String]): Unit = {
-    val spark = Engine.session("local[8]")
-    buildBlobCorpus(spark)
-    val exact = exactTop5(spark)
+  private lazy val spark: SparkSession = {
+    val s = Engine.wireSession(Engine.session("local[4]").newSession())
+    buildBlobCorpus(s)
+    s
+  }
 
+  /** arm name -> (recall@5, candidate count) */
+  private lazy val arms: Map[String, (Double, Long)] = {
+    val exact = exactTop5(spark)
     def recallOf(res: DataFrame): Double = {
       val got = res.select("qid", "vec_id").collect()
         .groupBy(_.getLong(0)).view.mapValues(_.map(_.getLong(1)).toSet).toMap
@@ -45,51 +47,49 @@ object RecallProbe {
         got.getOrElse(q, Set.empty).count(e.contains).toDouble / e.size
       }.sum / exact.size
     }
-
-    var rows = Vector.empty[(String, Double, Long)]
-    def arm(name: String)(run: => (DataFrame, Long)): Unit = {
+    def arm(run: => (DataFrame, Long)): (Double, Long) = {
       val (res, cands) = run
-      val r = recallOf(res)
-      rows :+= ((name, r, cands))
-      println(f"RECALL $name%-28s recall@5=$r%.2f candidates=$cands")
+      (recallOf(res), cands)
     }
+    Map(
+      "lsh bits=12 tables=1" -> arm(lshArm(12, tables = 1, multiprobe = false)),
+      "lsh bits=12 tables=2" -> arm(lshArm(12, tables = 2, multiprobe = false)),
+      "lsh bits=6 tables=2" -> arm(lshArm(6, tables = 2, multiprobe = false)),
+      "lsh bits=12 tables=2 multiprobe" -> arm(lshArm(12, tables = 2, multiprobe = true)),
+      "ivf nprobe=1" -> arm(ivfArm(1)),
+      "ivf nprobe=2" -> arm(ivfArm(2)))
+  }
+  private def recall(arm: String): Double = arms(arm)._1
+  private def candidates(arm: String): Long = arms(arm)._2
 
-    arm("lsh bits=12 tables=1") { lshArm(spark, 12, tables = 1, multiprobe = false) }
-    arm("lsh bits=12 tables=2") { lshArm(spark, 12, tables = 2, multiprobe = false) }
-    arm("lsh bits=6  tables=2") { lshArm(spark, 6, tables = 2, multiprobe = false) }
-    arm("lsh bits=12 tables=2 multiprobe") { lshArm(spark, 12, tables = 2, multiprobe = true) }
-    arm("ivf nprobe=1") { ivfArm(spark, 1) }
-    arm("ivf nprobe=2") { ivfArm(spark, 2) }
+  test("LSH: 2 tables lift recall over 1") {
+    assert(recall("lsh bits=12 tables=2") > recall("lsh bits=12 tables=1"), arms)
+  }
 
-    val r = rows.map(x => x._1 -> x._2).toMap
-    val c = rows.map(x => x._1 -> x._3).toMap
-    val checks = Seq(
-      ("2 tables lift over 1", r("lsh bits=12 tables=2") > r("lsh bits=12 tables=1")),
-      ("multiprobe lifts over single", r("lsh bits=12 tables=2 multiprobe") > r("lsh bits=12 tables=2")),
-      ("nprobe=2 lifts over 1", r("ivf nprobe=2") > r("ivf nprobe=1")),
-      // fewer bits = coarser buckets: recall must not drop while
-      // candidates GROW — the dial trades candidate volume for recall
-      ("bits 12->6 buys recall with candidates",
-        r("lsh bits=6  tables=2") >= r("lsh bits=12 tables=2")
-          && c("lsh bits=6  tables=2") > c("lsh bits=12 tables=2")))
-    checks.foreach { case (n, ok) =>
-      println(s"RECALL ${if (ok) "ok " else "BAD"} $n") }
-    spark.stop()
-    if (checks.exists(!_._2)) sys.exit(1)
+  test("LSH: multiprobe lifts recall over a single probe") {
+    assert(recall("lsh bits=12 tables=2 multiprobe") > recall("lsh bits=12 tables=2"), arms)
+  }
+
+  test("IVF: nprobe=2 lifts recall over nprobe=1") {
+    assert(recall("ivf nprobe=2") > recall("ivf nprobe=1"), arms)
+  }
+
+  test("LSH: bits 12 -> 6 keeps recall and pays for it in candidates") {
+    assert(recall("lsh bits=6 tables=2") >= recall("lsh bits=12 tables=2"), arms)
+    assert(candidates("lsh bits=6 tables=2") > candidates("lsh bits=12 tables=2"), arms)
   }
 
   /** 20 super-centers × 2 sibling sub-blobs × 50 members, dim 64.
-    * Sibling offset (1.2) ≈ member noise (1.0) ≪ super separation (~14),
-    * so true neighbors straddle the sibling pair but never cross supers.
+    * Sibling offset norm (~0.35·√64 ≈ 2.8) sits well under the member
+    * noise norm (√64 = 8) and far under the super separation (~14·√64):
+    * sibling members interleave with own-blob members in cosine rank, so
+    * true neighbors straddle the sibling pair but never cross supers.
     * vec_id ≡ sub-blob (mod 40): queries 0..4 land in 5 distinct cells. */
   private def buildBlobCorpus(spark: SparkSession): Unit = {
     import spark.implicits._
     val rnd = new scala.util.Random(42)
     val dim = 64
     val supers = Array.fill(20)(Array.fill(dim)(rnd.nextGaussian() * 10.0))
-    // sibling offset norm (~0.35·√64 ≈ 2.8) well under the member noise
-    // norm (√64 = 8): sibling members interleave with own-blob members in
-    // cosine rank, so each query's exact top-5 straddles the two cells
     val offsets = Array.fill(20)(Array.fill(dim)(rnd.nextGaussian() * 0.35))
     val rows = (0 until 2000).map { i =>
       val sub = i % 40
@@ -118,8 +118,7 @@ object RecallProbe {
   /** Generalized [[Corpus.lshSearch]] with table-count + multiprobe dials;
     * returns (top-5 result, candidate-pair count). Candidates stay a
     * (table, bucket) equi-join — the collision-bounded scale shape. */
-  private def lshArm(spark: SparkSession, bits: Int, tables: Int,
-      multiprobe: Boolean): (DataFrame, Long) = {
+  private def lshArm(bits: Int, tables: Int, multiprobe: Boolean): (DataFrame, Long) = {
     val sk = Corpus.lshSketchFlips(spark, bits).graftCkpt()
     sk.createOrReplaceTempView("rp_sk")
     val flips = if (multiprobe)
@@ -154,7 +153,7 @@ object RecallProbe {
   /** IVF over the label cells (the [[Pipeline]] q49/q104 template shape):
     * centroid per cell, query probes its top-`nprobe` cells by centroid
     * cosine, exact rerank inside the probed cells only. */
-  private def ivfArm(spark: SparkSession, nprobe: Int): (DataFrame, Long) = {
+  private def ivfArm(nprobe: Int): (DataFrame, Long) = {
     val cand = spark.sql(
       s"""WITH dims AS (
          |  SELECT label, pos, avg(CAST(v AS DOUBLE)) AS cv FROM (

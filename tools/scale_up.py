@@ -3,8 +3,8 @@
 
 Usage: python3 tools/scale_up.py SRC_DIR DST_DIR COPIES [--organic]
 
-Follows the ScaleProbe.scala multiplication scheme (see VERDICT r5 #1):
-each copy c gets every key column shifted by c*STRIDE so primary keys
+Key-offset scheme (see VERDICT r5 #1): copy c = 0..N-1 is the source
+table with every key column shifted by c*STRIDE, so primary keys
 stay unique and every FK relationship (orders->customer,
 lineitem->orders/part/supplier) lands on the matching shifted copy.
 Dimension tables (region, nation) are NOT multiplied — at 100 TB the
