@@ -15,8 +15,11 @@ import Engine.GraftCkptOps
   * answer-bound (qualifying content pairs only, ~answer/K rows). The
   * union of pass dumps therefore equals the single-shot verified
   * content-pair set with NO cross-pass dedup debt — invariance pinned at
-  * toy scale by NgramPassSpec, and the finish stage expands with the
-  * production [[Pipeline.ngramExpandTailSql]] verbatim.
+  * toy scale by NgramPassSpec. Each pass materializes the production
+  * [[Pipeline.ngramPxSql]] relation once and runs the production
+  * [[Pipeline.ngramContentPairsSql]] with the pass predicate, and the
+  * finish stage expands with [[Pipeline.ngramExpandTailSql]] and clusters
+  * with [[Pipeline.contentComponents]] — the q46/q66 builders verbatim.
   *
   * On a 1000-executor cluster the same join runs single-shot (~360 MB
   * scratch per executor at og300 — BASELINE); K-passing is the single-box
@@ -44,11 +47,12 @@ object NgramPassRun {
       case "pass" :: kS :: iS :: candDir :: Nil =>
         val (k, i) = (kS.toInt, iS.toInt)
         require(0 <= i && i < k, s"pass index $i out of range for K=$k")
-        val sql =
-          s"""${Pipeline.ngramCandSql("q46_g", s"pmod(hash(a.rep), $k) = $i")},
-             |${Pipeline.ngramVerifySql("cand", "q46_g",
-                 Pipeline.broadcastVerify(spark))}""".stripMargin
-        spark.sql(sql).write.mode("overwrite").parquet(s"$candDir/pass_$i")
+        // px once per pass JVM, the same relation the production entries
+        // materialize; the pass predicate filters its left self-join side
+        spark.sql(Pipeline.ngramPxSql("q46_g")).graftCkptView("q46_px")
+        spark.sql(Pipeline.ngramContentPairsSql("q46_px", "q46_g",
+          Pipeline.broadcastVerify(spark), passWhere = s"pmod(hash(a.rep), $k) = $i"))
+          .write.mode("overwrite").parquet(s"$candDir/pass_$i")
         val n = spark.read.parquet(s"$candDir/pass_$i").count()
         println(s"NGRAM-PASS-RUN pass $i/$k: $n verified content pairs, total $elapsed")
 
@@ -70,23 +74,8 @@ object NgramPassRun {
              |ORDER BY da, db""".stripMargin)
           .write.mode("overwrite").parquet(s"$outDir/q46_dedup_ngram_jaccard.parquet")
         println(s"NGRAM-PASS-RUN q46 dump done in $elapsed")
-        // q66 over EXACTLY these content pairs — the same edge definition
-        // as Pipeline.dedupComponents (content pairs + a self-loop per
-        // multi-member group), then Hash-Min components + the one
-        // id-level membership explode.
-        import org.apache.spark.sql.functions.{col, explode, lit, min => smin, max => smax, count => scount}
-        val edges = spark.sql(
-          """SELECT ra AS ca, rb AS cb FROM q46_cpv
-            |UNION ALL
-            |SELECT rep AS ca, rep AS cb FROM q46_g WHERE size(ids) >= 2""".stripMargin)
-        val labels = Pipeline.connectedComponents(edges, "ca", "cb")
-        labels.join(spark.table("q46_g"), labels("node") === col("rep"))
-          .select(col("label"), explode(col("ids")).as("id"))
-          .groupBy(col("label"))
-          .agg(smin("id").as("component"), scount(lit(1)).as("cluster_size"),
-            smin("id").as("representative"), smax("id").as("max_member"))
-          .select("component", "cluster_size", "representative", "max_member")
-          .orderBy("component")
+        // q66 over EXACTLY these content pairs, with the production tail
+        Pipeline.contentComponents(spark, "q46_cpv", "q46_g")
           .coalesce(1)
           .write.mode("overwrite").parquet(s"$outDir/q66_dedup_components.parquet")
         println(s"NGRAM-PASS-RUN q66 dump done in $elapsed")

@@ -82,7 +82,7 @@ object Pipeline {
     *
     *  1. a global total order on grams, ascending DOCUMENT FREQUENCY with
     *     the gram value as tie-break (computed in two linear passes:
-    *     explode + count, join back). Rare-first is the canonical AllPairs
+    *     explode + count, join back — [[ngramPxSql]]). Rare-first is the canonical AllPairs
     *     order — it pushes the high-df grams (exactly the df² heavy
     *     hitters of the old enumeration) out of every prefix;
     *  2. each set's PREFIX = its first `sz - ceil(g*sz) + 1` grams in that
@@ -117,55 +117,72 @@ object Pipeline {
     * organic ×10 (62.4 → 46.4 s same-box) and at organic ×100 they are
     * what brings the enumeration under the box (>110 GB scratch →
     * ~40 GB, 1441 s). */
-  /** Stages 1-2 of the prefix-filter join (gram df order + prefix
-    * postings) as the WITH-prefix of [[ngramCandSql]]. Counting the
-    * stage-3 enumeration bound Σ_g C(df_px(g), 2) over its px, without
-    * running the join, is how scratch volume was bracketed for corpora
-    * where the full join exceeds the box (VERDICT r13 #1: og300; counts
-    * in BASELINE §"q46/q66 at og300: bracketed"). */
-  /** The postings ⋈ gram-df join is pinned to SHUFFLE_HASH on the dfreq
-    * side (round 16, guide §3.1): left to the estimator, Spark sizes the
-    * EXPLODED postings side from the corpus file bytes (blind to the
-    * ~200× gram explode) and BROADCASTS it at small scales
-    * (BuildLeft of ~10M rows at og10 — a driver collect of the biggest
-    * relation in the query), flipping strategy as the corpus grows. The
-    * pinned plan hash-partitions both sides by gr and builds the
-    * AGGREGATED dict side per partition — no sort, no driver collect,
-    * same plan at every scale; dfreq rows are (hash, count) pairs spread
-    * uniformly by the 32-bit gram hash, so per-partition build memory is
-    * |distinct grams| / partitions at any corpus. Measured (OPTIMIZATION_r16.md,
-    * alternating reps, 32 cores): og10 1.41/1.42 s default-broadcast →
-    * 0.99/1.24 s SHJ; sf0.1 parity-or-better. Output invariant (join
-    * strategy only — NgramPassSpec pins the pair sets). */
-  private[graft] def ngramPrefixPostingsSql(groupsView: String): String =
+  /** Stages 1-2 of the prefix-filter join as ONE standalone statement: the
+    * px relation (rep, sz, gr), each set's rare-first prefix. Every caller
+    * materializes it once (graftCkpt) — the q46/q66 entries and each
+    * [[NgramPassRun]] pass JVM alike — because the stage-3 self-join
+    * references px on both sides and Catalyst inlines CTEs: inline, px is
+    * computed once per self-join SIDE (measured round 16: the two ~1.4 s
+    * jobs that dominated q46 at sf0.1). Counting the stage-3 enumeration
+    * bound Σ_g C(df_px(g), 2) over this relation, without running the
+    * join, is how scratch volume was bracketed for corpora where the full
+    * join exceeds the box (counts in BASELINE §"q46/q66 at og300:
+    * bracketed").
+    *
+    * The gram document frequency is an aggregate joined back under a
+    * SHUFFLE_HASH pin on the dict side (round 16): left to the estimator,
+    * Spark sizes the EXPLODED postings from the corpus file bytes (blind to
+    * the ~200× gram explode) and broadcasts them at small scales, flipping
+    * strategy as the corpus grows. The pinned plan hash-partitions both
+    * sides by gr and builds the aggregated (gram, count) side per
+    * partition — same plan at every scale, and skew-immune: map-side
+    * partial aggregation collapses a hot gram before any exchange. A
+    * window count (`COUNT(*) OVER (PARTITION BY gr)`: one explode, one
+    * exchange) gives the identical relation, but buffers a hot gram's
+    * whole posting list per task, and whole-entry A/Bs of q46 and q66 at
+    * sf0.1 and og10 found it no faster end to end (OPTIMIZATION_r17.md,
+    * addendum).
+    *
+    * Ranking prefixes by the gram hash instead of rare-first df was
+    * measured and rejected: still exact (the pigeonhole argument holds
+    * under any common total order) but the candidate volume doubles
+    * (sf0.1 702,764 → 1,447,189; og10 76.0M → 159.8M). */
+  private[graft] def ngramPxSql(groupsView: String): String =
     s"""WITH xall AS (
        |  SELECT rep, size(grams) AS sz, explode(grams) AS gr FROM $groupsView),
-       |dfreq AS (SELECT gr, COUNT(*) AS dfc FROM xall GROUP BY gr),
-       |px AS (
-       |  SELECT rep, sz, gr FROM (
-       |    SELECT /*+ SHUFFLE_HASH(dfreq) */ xall.rep, xall.sz, xall.gr,
-       |      row_number() OVER (PARTITION BY xall.rep
-       |                         ORDER BY dfreq.dfc, xall.gr) AS rk
-       |    FROM xall JOIN dfreq ON xall.gr = dfreq.gr) r
-       |  WHERE rk <= sz - cast(ceil($JaccGuard * sz) AS INT) + 1)""".stripMargin
-  /** Stage-3 candidate CTE (postings self-join + length filter + GROUP BY
-    * dedup), optionally restricted by `passWhere` — the disk-bounded
-    * K-pass protocol (round 15, VERDICT r14 #1): `pmod(hash(a.rep), K) = i`
-    * partitions the CANDIDATE SPACE by the smaller rep, so (a) every
-    * unordered pair lands in exactly ONE pass (a.rep < b.rep fixes which
-    * rep hashes), making the union of passes trivially equal to the
-    * single-shot candidate set with no cross-pass dedup; and (b) the
-    * predicate references only the LEFT join input, so Catalyst pushes it
-    * below the join — each pass shuffles and enumerates only ~1/K of the
-    * Σ_g C(df,2) stage-3 volume (the measured 360-405 GB og300 scratch
-    * wall becomes K × the og100-proven ~40 GB envelope). Invariance of
-    * the K-pass union vs the single-shot plan is pinned by NgramPassSpec. */
-  private[graft] def ngramCandSql(groupsView: String, passWhere: String = ""): String = {
+       |dfreq AS (SELECT gr, COUNT(*) AS dfc FROM xall GROUP BY gr)
+       |SELECT rep, sz, gr FROM (
+       |  SELECT /*+ SHUFFLE_HASH(dfreq) */ xall.rep, xall.sz, xall.gr,
+       |    row_number() OVER (PARTITION BY xall.rep
+       |                       ORDER BY dfreq.dfc, xall.gr) AS rk
+       |  FROM xall JOIN dfreq ON xall.gr = dfreq.gr) r
+       |WHERE rk <= sz - cast(ceil($JaccGuard * sz) AS INT) + 1""".stripMargin
+  /** Stage-3 candidate CTE over a materialized px view (prefix-postings
+    * self-join + length filter + GROUP BY dedup), optionally restricted by
+    * `passWhere` — the disk-bounded K-pass protocol (round 15, VERDICT r14
+    * #1): `pmod(hash(a.rep), K) = i` partitions the CANDIDATE SPACE by the
+    * smaller rep, so (a) every unordered pair lands in exactly ONE pass
+    * (a.rep < b.rep fixes which rep hashes), making the union of passes
+    * trivially equal to the single-shot candidate set with no cross-pass
+    * dedup; and (b) the predicate references only the LEFT join input, so
+    * Catalyst pushes it below the join — each pass shuffles and
+    * enumerates only ~1/K of the Σ_g C(df,2) stage-3 volume (the measured
+    * 360-405 GB og300 scratch wall becomes K × the og100-proven ~40 GB
+    * envelope). Invariance of the K-pass union vs the single-shot plan is
+    * pinned by NgramPassSpec.
+    *
+    * The self-join is pinned to SHUFFLE_HASH on the right side (round 16):
+    * a checkpoint keeps its origin's file-size estimate, blind to the ~200×
+    * gram explode, so left alone Spark BROADCASTS one whole px side at
+    * small scales (~5 GB un-gated at og300, a certain 8 GiB failure past
+    * it) and flips strategy as the corpus grows. px is rare-first by
+    * construction, so its gram keys are skew-light and the per-partition
+    * hash build is px_bytes / partitions at any scale. */
+  private[graft] def ngramCandSql(pxView: String, passWhere: String = ""): String = {
     val where = if (passWhere.isEmpty) "" else s"\n  WHERE $passWhere"
-    s"""${ngramPrefixPostingsSql(groupsView)},
-       |cand AS (
-       |  SELECT a.rep AS ra, b.rep AS rb
-       |  FROM px a JOIN px b ON a.gr = b.gr AND a.rep < b.rep
+    s"""cand AS (
+       |  SELECT /*+ SHUFFLE_HASH(b) */ a.rep AS ra, b.rep AS rb
+       |  FROM $pxView a JOIN $pxView b ON a.gr = b.gr AND a.rep < b.rep
        |    AND least(a.sz, b.sz) >= $JaccGuard * greatest(a.sz, b.sz)$where
        |  GROUP BY a.rep, b.rep)""".stripMargin
   }
@@ -186,71 +203,11 @@ object Pipeline {
        |  SELECT ra, rb, round(ni / cast(sa + sb - ni AS DOUBLE), 6) AS jacc
        |  FROM v) t
        |WHERE jacc >= $JaccThreshold""".stripMargin
-  private[graft] def ngramContentPairsSpark(groupsView: String,
-      broadcast: Boolean = true): String =
-    s"""${ngramCandSql(groupsView)},
-       |${ngramVerifySql("cand", groupsView, broadcast)}""".stripMargin
-  /** Standalone SELECT for the px relation (stages 1-2) — the
-    * materialization seam for the production q46/q66 entries. Catalyst
-    * inlines CTEs, so the px CTE referenced by BOTH sides of the stage-3
-    * self-join used to compute the whole explode → df-count → join →
-    * window pipeline TWICE per run (measured round 16: the two ~1.4 s
-    * jobs that dominate q46 at sf0.1; at og300 the same factor-2 applies
-    * to the linear stages). Materializing px once (graftCkpt) removes the
-    * duplicate at every scale; the K-pass runners keep the inline form —
-    * their per-pass JVMs would pay the materialization without reusing it
-    * across passes, and their committed pushdown pattern (OPTIMIZATION_r16.md)
-    * is pinned against the inline plan. Output invariance of the two
-    * forms is pinned by NgramPassSpec ("materialized px"). */
-  /** Round 17: the PRODUCTION px statement computes the gram document
-    * frequency with a window count (`COUNT(*) OVER (PARTITION BY gr)`)
-    * instead of the aggregate + SHUFFLE_HASH join above — one explode
-    * instead of two (Catalyst inlines the xall CTE into both join inputs),
-    * one exchange of the postings instead of exchange + dict exchange +
-    * hash build. Row-identical by construction (dfc is the same count,
-    * `(dfc, gr)` is a total order within rep since grams are distinct per
-    * content): the stage-3 candidate bound Σ_g C(df_px(g),2) matched
-    * EXACTLY under both forms (OPTIMIZATION_r17.md: 702,764 at sf0.1 /
-    * 76,045,864 at og10), and NgramPassSpec pins the resulting pair sets
-    * against the inline aggregate form. Measured (OPTIMIZATION_r17.md,
-    * alternating in one JVM):
-    * sf0.1 0.83 → 0.39 s, og10 0.84–1.12 → 0.77–0.78 s steady.
-    *
-    * Scale envelope: WindowExec buffers ONE gram's postings per group —
-    * hottest-gram df × 16 B per task (~30 MB at og300's m=1.5M; spills
-    * gracefully beyond) — where the aggregate form is skew-immune via
-    * map-side partial aggregation. The single-shot production plan is
-    * documented for corpora up to the og300 regime; past it the K-pass
-    * protocol is the plan anyway, and [[NgramPassRun]] keeps the
-    * aggregate+join form (its committed og300 pushdown evidence is pinned
-    * against that plan shape). A third formulation — dropping the
-    * rare-first df order entirely and ranking prefixes by the gram hash —
-    * was measured and REJECTED: still exact (the pigeonhole prefix
-    * argument holds under any common total order) but the candidate
-    * volume doubles (sf0.1 702,764 → 1,447,189; og10 76.0M → 159.8M),
-    * which the enumeration stage pays back with interest at every scale. */
-  private[graft] def ngramPxSelectSql(groupsView: String): String =
-    s"""WITH xall AS (
-       |  SELECT rep, size(grams) AS sz, explode(grams) AS gr FROM $groupsView),
-       |px AS (
-       |  SELECT rep, sz, gr FROM (
-       |    SELECT rep, sz, gr,
-       |      row_number() OVER (PARTITION BY rep ORDER BY dfc, gr) AS rk
-       |    FROM (SELECT rep, sz, gr,
-       |            COUNT(*) OVER (PARTITION BY gr) AS dfc FROM xall) w) r
-       |  WHERE rk <= sz - cast(ceil($JaccGuard * sz) AS INT) + 1)
-       |SELECT rep, sz, gr FROM px""".stripMargin
-  /** [[ngramCandSql]] reading a pre-materialized px view: identical join,
-    * length filter and GROUP BY dedup — only the px source differs. */
-  private[graft] def ngramCandFromPxSql(pxView: String): String =
-    s"""cand AS (
-       |  SELECT /*+ SHUFFLE_HASH(b) */ a.rep AS ra, b.rep AS rb
-       |  FROM $pxView a JOIN $pxView b ON a.gr = b.gr AND a.rep < b.rep
-       |    AND least(a.sz, b.sz) >= $JaccGuard * greatest(a.sz, b.sz)
-       |  GROUP BY a.rep, b.rep)""".stripMargin
-  private[graft] def ngramContentPairsFromPx(pxView: String, groupsView: String,
-      broadcast: Boolean = true): String =
-    s"""WITH ${ngramCandFromPxSql(pxView)},
+  /** Verified content pairs (ra, rb, jacc) from a materialized px view,
+    * optionally one K-pass slice (`passWhere`, see [[ngramCandSql]]). */
+  private[graft] def ngramContentPairsSql(pxView: String, groupsView: String,
+      broadcast: Boolean = true, passWhere: String = ""): String =
+    s"""WITH ${ngramCandSql(pxView, passWhere)},
        |${ngramVerifySql("cand", groupsView, broadcast)}""".stripMargin
   /** Expansion tail (cross-pair + self-clique CTEs and the final UNION) as
     * a reusable fragment over any verified content-pairs relation — shared
@@ -267,18 +224,11 @@ object Pipeline {
        |SELECT da, db, jacc FROM xc
        |UNION ALL
        |SELECT da, db, jacc FROM sp""".stripMargin
-  private def ngramPairsSpark(groupsView: String, cfg: ExpandCfg,
-      broadcast: Boolean = true): String =
-    s"""WITH cp AS (
-       |  SELECT * FROM (
-       |${ngramContentPairsSpark(groupsView, broadcast)}
-       |  ) _cp),
-       |${ngramExpandTailSql("cp", groupsView, cfg)}""".stripMargin
-  private def ngramPairsFromPxSpark(pxView: String, groupsView: String,
+  private def ngramPairsSql(pxView: String, groupsView: String,
       cfg: ExpandCfg, broadcast: Boolean = true): String =
     s"""WITH cp AS (
        |  SELECT * FROM (
-       |${ngramContentPairsFromPx(pxView, groupsView, broadcast)}
+       |${ngramContentPairsSql(pxView, groupsView, broadcast)}
        |  ) _cp),
        |${ngramExpandTailSql("cp", groupsView, cfg)}""".stripMargin
   /** Chunk-parallel membership expansion (round 11). Collapse-first leaves
@@ -820,7 +770,7 @@ object Pipeline {
   /** Spark side is a collapse-first PREFIX-FILTERED inverted-index join —
     * the shape that survives 100 TB of duplicate-heavy data: group
     * identical texts (the [[ngramGroupsSpark]] view), find qualifying
-    * distinct-content pairs via [[ngramContentPairsSpark]] (rare-first
+    * distinct-content pairs via [[ngramContentPairsSql]] (rare-first
     * prefix postings join + exact array_intersect verify — see its
     * scaladoc for the exactness argument), then expand qualifying group
     * pairs back to id pairs (cross-group via the ids lists; within-group
@@ -842,11 +792,9 @@ object Pipeline {
          |ORDER BY da, db""".stripMargin
     e("q46_dedup_ngram_jaccard", duck) { (s, dir) =>
       s.sql(ngramGroupsSpark).graftCkptView("q46_g")
-      // px materialized once (round 16): the stage-3 self-join references
-      // px twice, and Catalyst's CTE inlining recomputed the whole
-      // stage-1-2 pipeline per side — see [[ngramPxSelectSql]]
-      s.sql(ngramPxSelectSql("q46_g")).graftCkptView("q46_px")
-      s.sql(ngramPairsFromPxSpark("q46_px", "q46_g", expandCfg(s, dir),
+      // px materialized once — see [[ngramPxSql]]
+      s.sql(ngramPxSql("q46_g")).graftCkptView("q46_px")
+      s.sql(ngramPairsSql("q46_px", "q46_g", expandCfg(s, dir),
         broadcastVerify(s)) + "\nORDER BY da, db")
     }
   }
@@ -1351,15 +1299,6 @@ object Pipeline {
     * node sets match by the self-loop rule; labels (= min reachable
     * doc_id) agree because every group's rep is its min id. */
   private val dedupComponents = {
-    // grams view referenced 4× by the pair join (both sides + both size
-    // lookups) — must be materialized once, like q46 (CTE inlining
-    // recomputes otherwise). Edge definition = EXACTLY q46's content
-    // pairs, via the shared ngram* builders.
-    def sparkContentEdges(broadcast: Boolean) =
-      s"""SELECT ra AS ca, rb AS cb FROM (
-         |${ngramContentPairsFromPx("q66_px", "q66_g", broadcast)}) cpairs
-         |UNION ALL
-         |SELECT rep AS ca, rep AS cb FROM q66_g WHERE size(ids) >= 2""".stripMargin
     val duck =
       s"""WITH RECURSIVE gd AS (
         |  $ngramGramsDuck),
@@ -1378,23 +1317,39 @@ object Pipeline {
         |FROM cc GROUP BY component
         |ORDER BY component""".stripMargin
     e("q66_dedup_components", duck) { (s, _) =>
-      import org.apache.spark.sql.functions.{col, explode, lit, min => smin, max => smax, count => scount}
+      // the groups view is referenced 4× by the pair join and px twice —
+      // both materialized once, exactly as in q46; the edge set is q46's
+      // content pairs via the same builders
       s.sql(ngramGroupsSpark).graftCkptView("q66_g")
-      // px materialized once, exactly as in q46 (round 16) — the edge set
-      // is q46's content pairs, so it inherits the same double-compute fix
-      s.sql(ngramPxSelectSql("q66_g")).graftCkptView("q66_px")
-      val contentEdges = s.sql(sparkContentEdges(broadcastVerify(s))).graftCkpt()
-      val labels = connectedComponents(contentEdges, "ca", "cb")
-      // clique-expand membership: one explode per group, then one aggregate
-      // — the only id-level pass, linear in the output
-      labels.join(s.table("q66_g"), labels("node") === col("rep"))
-        .select(col("label"), explode(col("ids")).as("id"))
-        .groupBy(col("label"))
-        .agg(smin("id").as("component"), scount(lit(1)).as("cluster_size"),
-          smin("id").as("representative"), smax("id").as("max_member"))
-        .select("component", "cluster_size", "representative", "max_member")
-        .orderBy("component")
+      s.sql(ngramPxSql("q66_g")).graftCkptView("q66_px")
+      contentComponents(s,
+        s"(${ngramContentPairsSql("q66_px", "q66_g", broadcastVerify(s))})", "q66_g")
     }
+  }
+
+  /** q66's components tail over a verified content-pairs relation `cpRel`
+    * (a view name or a parenthesized query) and its groups view — shared by
+    * the q66 entry and [[NgramPassRun]]'s finish stage. Edges are the
+    * content pairs plus a self-loop per multi-member group (membership
+    * alone puts a group's ids in the node set); after Hash-Min, each
+    * group's member list is exploded once and aggregated per component —
+    * the only id-level pass, linear in the output. */
+  private[graft] def contentComponents(s: SparkSession, cpRel: String,
+      groupsView: String): DataFrame = {
+    import org.apache.spark.sql.functions.{col, explode, lit, min => smin, max => smax, count => scount}
+    val edges = s.sql(
+      s"""SELECT ra AS ca, rb AS cb FROM $cpRel cpairs
+         |UNION ALL
+         |SELECT rep AS ca, rep AS cb FROM $groupsView WHERE size(ids) >= 2""".stripMargin)
+      .graftCkpt()
+    val labels = connectedComponents(edges, "ca", "cb")
+    labels.join(s.table(groupsView), labels("node") === col("rep"))
+      .select(col("label"), explode(col("ids")).as("id"))
+      .groupBy(col("label"))
+      .agg(smin("id").as("component"), scount(lit(1)).as("cluster_size"),
+        smin("id").as("representative"), smax("id").as("max_member"))
+      .select("component", "cluster_size", "representative", "max_member")
+      .orderBy("component")
   }
 
   /** Connected components over an undirected edge list via iterative
@@ -1450,8 +1405,6 @@ object Pipeline {
       changed = next.filter(col("label") =!= col("old")).count()
       labels = next.select(col("node"), col("label"))
       rounds += 1
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        System.err.println(s"[cc] round $rounds changed=$changed")
     }
     require(changed == 0,
       s"connectedComponents did not converge in $maxRounds rounds (graph diameter too large — raise maxRounds or use alternating small/large-star)")

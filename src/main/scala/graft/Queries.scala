@@ -107,7 +107,6 @@ object Queries {
   }
 
   private[graft] def e(name: String, oracle: String)(q: Q): Entry = Entry(name, Some(oracle), q)
-  private[graft] def rowsOnly(name: String)(q: Q): Entry = Entry(name, None, q)
 
   // =========================================================================
   // Core relational surface (SURVEY §2.3-2.5)

@@ -135,27 +135,10 @@ object Extras {
     * `body` receives the clone and must build, start, AND read the stream
     * from it: the memory sink registers its result view in the session
     * that starts the stream. */
-  /** State-partition count for the contract streams (q88/q95), tunable
-    * without a rebuild for sizing experiments: conf
-    * `graft.stream.statePartitions` / env SPARK_GRAFT_STATE_PARTITIONS,
-    * default 8 (the round-5 measured choice). Size to key cardinality at
-    * scale, exactly as the [[withStatePartitions]] scaladoc prescribes. */
-  private def statePartitions(s: org.apache.spark.sql.SparkSession): Int =
-    s.conf.getOption("graft.stream.statePartitions")
-      .orElse(sys.env.get("SPARK_GRAFT_STATE_PARTITIONS"))
-      .map { raw =>
-        // ADVICE r16: a malformed/non-positive value used to surface as a
-        // bare NumberFormatException deep inside the q88/q95 entry with no
-        // hint of which knob was bad.
-        val n = try raw.toInt catch { case _: NumberFormatException =>
-          throw new IllegalArgumentException(
-            "graft.stream.statePartitions / SPARK_GRAFT_STATE_PARTITIONS " +
-              s"must be an integer > 0, got '$raw'")
-        }
-        require(n > 0, "graft.stream.statePartitions / " +
-          s"SPARK_GRAFT_STATE_PARTITIONS must be > 0, got $n")
-        n
-      }.getOrElse(8)
+  /** State-partition count for the contract streams (q88/q95), the
+    * round-5 measured choice. Size to key cardinality at scale, exactly as
+    * the [[withStatePartitions]] scaladoc prescribes. */
+  private val StatePartitions = 8
 
   private def withStatePartitions[A](
       s: org.apache.spark.sql.SparkSession, n: Int)(
@@ -694,7 +677,7 @@ object Extras {
       import org.apache.spark.sql.streaming.Trigger
       val chk = new java.io.File(Engine.scratchDir("q88_chk", dir))
       if (chk.exists()) deleteRecursively(chk) // fresh run, not a stale-checkpoint resume
-      withStatePartitions(s, statePartitions(s)) { cs =>
+      withStatePartitions(s, StatePartitions) { cs =>
         val q = Streaming.windowedCounts(Streaming.eventStream(cs, dir))
           .writeStream.format("memory").queryName("graft_q88_sink")
           .outputMode("complete")
@@ -957,7 +940,7 @@ object Extras {
       import org.apache.spark.sql.streaming.Trigger
       val chk = new java.io.File(Engine.scratchDir("q95_chk", dir))
       if (chk.exists()) deleteRecursively(chk)
-      withStatePartitions(s, statePartitions(s)) { cs =>
+      withStatePartitions(s, StatePartitions) { cs =>
         val clicks = Streaming.eventStream(cs, dir)
           .filter(col("event_type") === "click")
           .select(col("event_id").as("click_id"), col("user_id"),

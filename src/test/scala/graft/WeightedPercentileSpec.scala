@@ -99,4 +99,16 @@ class WeightedPercentileSpec extends AnyFunSuite {
     // a: total 7, threshold 3.5 → cum(10)=6 crosses; b: threshold 1 → 1.0
     assert(got == Seq(("a", 10.0), ("b", 1.0)))
   }
+
+  test("q80 entry == Spark running q80's row-level oracle SQL at sf0.01") {
+    // the collapsed (rf, v) window against the per-row cumulative window
+    // it replaces — the same definition the DuckDB oracle runs
+    val sf = "/root/testdata/sf0.01"
+    val s = Engine.session("local[4]").newSession()
+    Engine.prepare(s, sf)
+    val got = SparkEntry.queries("q80_weighted_pct_window")(s, sf).collect().toSeq
+    val want = s.sql(SparkEntry.oracleSql("q80_weighted_pct_window")).collect().toSeq
+    assert(got.nonEmpty)
+    assert(got === want)
+  }
 }
