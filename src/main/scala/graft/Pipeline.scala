@@ -638,30 +638,30 @@ object Pipeline {
   }
 
   // =========================================================================
-  // Dedup 3: SimHash (token-hash bit-vote → 32-bit sketch → hamming pairs)
+  // Dedup 3: SimHash (token-hash bit-vote → 60-bit sketch → hamming pairs)
   // =========================================================================
 
-  /** SimHash sketch width: 60 bits (token hash = 15 md5 hex chars, so
-    * every sketch bit carries signal and the BIGINT sign bit stays clear —
-    * shiftright never sign-extends). Banding is owned by
-    * [[HammingJoinRewrite]] (interleaved k+1 bands over the 64-bit
-    * domain, so the 4 dead high bits spread across bands). */
-  private[graft] val SimhashBits = 60
-  private def h60Spark(s: String) = s"cast(conv(substr(md5($s),1,15),16,10) AS BIGINT)"
   private def h60Duck(s: String) = s"('0x' || substr(md5($s),1,15))::BIGINT"
 
   /** SimHash over the marked candidate subset (docs containing the planted
-    * 'dup' token). Spark side: explode 60-bit token hashes and take the 60
-    * per-bit ±1 votes as aggregate columns — a single codegen'd
-    * HashAggregate (the nested higher-order-function fold this replaces is
-    * interpreted per element: 60 × n_tokens closure dispatches per row).
-    * Integer vote sums are order-independent, so the sketch is identical.
+    * 'dup' token). Spark side: the 60-bit sketch (token hash = 15 md5 hex
+    * chars, so every sketch bit carries signal and the BIGINT sign bit
+    * stays clear — shiftright never sign-extends) is the codegen'd
+    * `simhash60(text)` kernel ([[Fingerprints.simhash60]]): one pass over
+    * the text's bytes, one md5 per token, the 60 per-bit ±1 votes in a
+    * local array. It replaced an explode of every token hash into a row
+    * and a 60-column `SUM(CASE ...)` vote aggregate behind a shuffle,
+    * whose fused method was the one generated method over HotSpot's
+    * 8,000-byte JIT limit. Integer vote sums are order-independent, so
+    * the sketch is identical (ExpressionsSpec keeps the old SQL as the
+    * reference).
     *
     * Pairing is BANDED, not all-pairs — and since round 2 the banding is
     * done by the [[HammingJoinRewrite]] optimizer rule: the query below is
     * the NAIVE `bit_count(a.sh ^ b.sh) <= 8` join, and the rule rewrites
     * it into the (band, value) equi-join at plan time (k+1 = 9 interleaved
-    * bands partitioning the 64-bit domain). By pigeonhole, a pair at
+    * bands partitioning the 64-bit domain, so the 4 dead high bits spread
+    * across bands). By pigeonhole, a pair at
     * hamming ≤ 8 differs in at most 8 of the 9 bands, so at least one
     * band is exactly equal — the equi-join has PERFECT recall at the ≤8
     * threshold and the exact bit_count verify keeps precision, so the
@@ -674,35 +674,27 @@ object Pipeline {
     * own layout). 4 bands
     * would not suffice even for recall: 8 differing bits can spread 2 per
     * band.
-    * The sketch table feeds both join sides → eagerly materialized via
-    * `localCheckpoint` (`.cache()` through a temp view misses for
-    * HOF-lambda plans, and Catalyst would otherwise inline the CTE and
-    * compute the vote aggregation twice).
+    * The groups table carries the sketch and feeds both join sides and
+    * both expansions → eagerly materialized via `localCheckpoint`
+    * (Catalyst would otherwise inline the view and recompute the
+    * aggregate per use).
+    *
+    * COLLAPSE-FIRST (round 10): the sketch is a pure function of text,
+    * so both the sketch and the hamming join run over DISTINCT contents
+    * (keyed by min doc_id) and the id-level answer is recovered by
+    * expanding group memberships — identical contents have hamming 0,
+    * always within threshold, so a group is a clique; a qualifying
+    * content pair expands to all cross pairs carrying its hamming. The
+    * unchanged all-pairs DuckDB oracle proves the restatement.
     */
-  private val votes = (0 until SimhashBits).map { b =>
-    s"SUM(CASE WHEN (shiftright(x, $b) & 1) = 1 THEN 1 ELSE -1 END) AS v$b"
-  }.mkString(",\n    ")
-  private val assemble = (0 until SimhashBits).map { b =>
-    s"CASE WHEN v$b >= 0 THEN shiftleft(cast(1 AS BIGINT), $b) ELSE cast(0 AS BIGINT) END"
-  }.mkString(" + ")
-  private[graft] val simhashSketchSql =
-    s"""WITH t AS (
-       |  SELECT rep, explode(transform(split(text, ' '), w -> ${h60Spark("w")})) AS x
-       |  FROM q45_g),
-       |v AS (
-       |  SELECT rep,
-       |    $votes
-       |  FROM t GROUP BY rep)
-       |SELECT rep, $assemble AS sh FROM v""".stripMargin
-  // COLLAPSE-FIRST (round 10): the sketch is a pure function of text,
-  // so both the vote aggregation and the hamming join run over DISTINCT
-  // contents (keyed by min doc_id) and the id-level answer is recovered
-  // by expanding group memberships — identical contents have hamming 0,
-  // always within threshold, so a group is a clique; a qualifying
-  // content pair expands to all cross pairs carrying its hamming. The
-  // unchanged all-pairs DuckDB oracle proves the restatement.
+  // `text` is never null here (the LIKE drops nulls), but the grouping
+  // key's type stays nullable and so would `sh`; the coalesce only gives
+  // `sh` the non-null type. A nullable sketch puts a null check on each
+  // of the rewrite's 60 band-bit extractions, and the banded join's
+  // generated method grew from 3,825 to 6,431 bytes.
   private[graft] val simhashGroupsSql =
-    """SELECT text, min(doc_id) AS rep, sort_array(collect_list(doc_id)) AS ids
+    """SELECT text, min(doc_id) AS rep, sort_array(collect_list(doc_id)) AS ids,
+      |  coalesce(simhash60(text), 0) AS sh
       |FROM documents WHERE text LIKE '%dup%'
       |GROUP BY text""".stripMargin
   // written as the NAIVE all-pairs hamming join: [[HammingJoinRewrite]]
@@ -714,7 +706,7 @@ object Pipeline {
   private[graft] val simhashContentPairSql =
     s"""SELECT a.rep AS ra, b.rep AS rb,
        |  cast(bit_count(a.sh ^ b.sh) AS BIGINT) AS hamming
-       |FROM q45_s a JOIN q45_s b
+       |FROM q45_g a JOIN q45_g b
        |  ON bit_count(a.sh ^ b.sh) <= 8 AND a.rep < b.rep""".stripMargin
   /** K-pass variant of [[simhashContentPairSql]] (round 16, the q44/q46
     * protocol carried to q45): the pass predicate lives in an a-side
@@ -727,7 +719,7 @@ object Pipeline {
   private[graft] def simhashContentPairPassSql(passFilter: String): String =
     s"""SELECT a.rep AS ra, b.rep AS rb,
        |  cast(bit_count(a.sh ^ b.sh) AS BIGINT) AS hamming
-       |FROM (SELECT * FROM q45_s WHERE $passFilter) a JOIN q45_s b
+       |FROM (SELECT * FROM q45_g WHERE $passFilter) a JOIN q45_g b
        |  ON bit_count(a.sh ^ b.sh) <= 8 AND a.rep < b.rep""".stripMargin
   private[graft] def simhashExpandSql(cfg: ExpandCfg) =
     s"""SELECT da, db, hamming FROM (
@@ -745,7 +737,7 @@ object Pipeline {
          |  FROM documents WHERE text LIKE '%dup%'),
          |s AS (
          |  SELECT doc_id,
-         |    list_sum(list_transform(range(0, $SimhashBits), bb ->
+         |    list_sum(list_transform(range(0, ${Fingerprints.SimhashBits}), bb ->
          |      CASE WHEN list_sum(list_transform(h,
          |                  x -> CASE WHEN ((x >> bb) & 1) = 1 THEN 1 ELSE -1 END)) >= 0
          |           THEN (1::BIGINT << bb) ELSE 0::BIGINT END))::BIGINT AS sh
@@ -757,7 +749,6 @@ object Pipeline {
          |ORDER BY da, db""".stripMargin
     e("q45_dedup_simhash", duck) { (s, dir) =>
       s.sql(simhashGroupsSql).graftCkptView("q45_g")
-      s.sql(simhashSketchSql).graftCkptView("q45_s")
       s.sql(simhashContentPairSql).graftCkptView("q45_cp")
       s.sql(simhashExpandSql(expandCfg(s, dir)))
     }

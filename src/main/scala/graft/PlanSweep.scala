@@ -17,9 +17,9 @@ import org.apache.spark.sql.SparkSession
   *
   * Run: `sbt "runMain graft.PlanSweep"` — prints one line per query and a
   * BAD line per smell; exit code 1 if any smell found.
-  * `sbt "runMain graft.PlanSweep --update"` — rewrite the snapshot from
-  * the current plans (use after an INTENTIONAL plan change, then review
-  * the snapshot diff in git).
+  * `sbt "runMain graft.PlanSweep --update"` — rewrite the snapshot's
+  * counts from the current plans, keeping its comment lines (use after
+  * an INTENTIONAL plan change, then review the snapshot diff in git).
   * `sbt "runMain graft.PlanSweep --explain [names...]"` — print formatted
   * physical plans for headline queries instead (the scale audit:
   * PushedFilters reach the parquet scan, small dims broadcast, aggregates
@@ -49,10 +49,18 @@ object PlanSweep {
       } else if (args.contains("--update")) {
         val (found, observed) = audit(spark, sf, ratchet = false, println)
         if (sf == defaultSf) {
+          // the snapshot's comment lines record why counts moved; keep them
+          val history =
+            if (new java.io.File(snapshotPath).exists()) {
+              val src = scala.io.Source.fromFile(snapshotPath)
+              try src.getLines().filter(_.startsWith("#")).toList finally src.close()
+            } else Nil
           val w = new java.io.PrintWriter(snapshotPath)
           // ASCII-only: the PrintWriter uses the platform charset, and a
           // non-ASCII dash here has already mojibake'd once (VERDICT r7 §6)
-          w.println("# per-query exchange counts at sf0.01 - PlanSweep fails any increase")
+          if (history.isEmpty)
+            w.println("# per-query exchange counts at sf0.01 - PlanSweep fails any increase")
+          history.foreach(w.println)
           observed.toSeq.sorted.foreach { case (n, c) => w.println(s"$n $c") }
           w.close()
           println(s"SWEEP wrote ${observed.size} entries to $snapshotPath")

@@ -40,8 +40,6 @@ object SimhashPassRun {
       case "pass" :: kS :: iS :: candDir :: Nil =>
         val (k, i) = (kS.toInt, iS.toInt)
         require(0 <= i && i < k, s"pass index $i out of range for K=$k")
-        spark.sql(Pipeline.simhashSketchSql).graftCkpt()
-          .createOrReplaceTempView("q45_s")
         spark.sql(Pipeline.simhashContentPairPassSql(s"pmod(hash(rep), $k) = $i"))
           .write.mode("overwrite").parquet(s"$candDir/pass_$i")
         val n = spark.read.parquet(s"$candDir/pass_$i").count()

@@ -87,6 +87,7 @@ object functions {
     reg.createOrReplaceTempFunction("poly_hash", PolyHash.build, "built-in")
     reg.createOrReplaceTempFunction("min_gram_hash", MinGramHash.build, "built-in")
     reg.createOrReplaceTempFunction("token_lex_count", TokenLexCount.build, "built-in")
+    reg.createOrReplaceTempFunction("simhash60", SimHash60.build, "built-in")
     reg.createOrReplaceTempFunction("to_fixed", DoubleToFixed.build, "built-in")
     // Typed Aggregator UDAF (SURVEY §2.8 AggregateUDFImpl surface).
     spark.udf.register("weighted_median",

@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Specs for the custom Catalyst expressions: DotProduct null/length
   * semantics and the Fingerprints kernels' exact equivalence to the
-  * SQL-HOF formulations they replaced (incl. non-ASCII text). */
+  * SQL formulations they replaced (incl. non-ASCII text). */
 class ExpressionsSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = Engine.session("local[4]")
@@ -81,6 +81,58 @@ class ExpressionsSpec extends AnyFunSuite {
         |FROM (SELECT 'héllo wörld – ünïcode テスト' AS s)""".stripMargin).collect()(0)
     assert(r.getBoolean(0), "poly_hash diverges on non-ASCII")
     assert(r.getBoolean(1), "min_gram_hash diverges on non-ASCII")
+  }
+
+  test("simhash60 ≡ the explode-and-vote SQL on random, edge-case and sf0.1 texts") {
+    functions.registerAll(spark)
+    // q45's former sketch statement, kept as the reference: one row per
+    // token hash, then 60 per-bit ±1 vote sums behind a GROUP BY
+    val votes = (0 until Fingerprints.SimhashBits).map { b =>
+      s"SUM(CASE WHEN (shiftright(x, $b) & 1) = 1 THEN 1 ELSE -1 END) AS v$b"
+    }.mkString(",\n    ")
+    val assemble = (0 until Fingerprints.SimhashBits).map { b =>
+      s"CASE WHEN v$b >= 0 THEN shiftleft(cast(1 AS BIGINT), $b) ELSE cast(0 AS BIGINT) END"
+    }.mkString(" + ")
+    val reference =
+      s"""WITH t AS (
+         |  SELECT rep, explode(transform(split(text, ' '),
+         |    w -> cast(conv(substr(md5(w),1,15),16,10) AS BIGINT))) AS x
+         |  FROM sh_texts),
+         |v AS (
+         |  SELECT rep,
+         |    $votes
+         |  FROM t GROUP BY rep)
+         |SELECT rep, $assemble AS sh FROM v""".stripMargin
+    val rnd = new scala.util.Random(45)
+    val words = Seq("", " ", "  ", "dup", "a", "zz", "é", "λλ", "テスト", "𝕏", "x1")
+    val edge = Seq("", " ", "   ", "dup", " dup", "dup ", " dup ", "dup  dup",
+      "a  b   c", "héllo wörld – ünïcode テスト", "𝕏 𝕏𝕏  dup")
+    val random = (1 to 1000).map(_ =>
+      (1 to rnd.nextInt(40)).map(_ => words(rnd.nextInt(words.size))).mkString(" "))
+    import spark.implicits._
+    val sf01 = PlanSweep.defaultSf.stripSuffix("sf0.01") + "sf0.1" // next to the default corpus
+    val real = spark.read.parquet(s"$sf01/documents.parquet")
+      .where("text LIKE '%dup%'").select("text").distinct().as[String].collect().toSeq
+    assert(real.nonEmpty, "sf0.1 must hold marked 'dup' texts")
+    val texts = (edge ++ random ++ real).distinct
+    // an RDD-backed view, not a LocalRelation: a projection over a local
+    // Seq is evaluated interpreted at optimization time, and this must
+    // run the codegen'd path
+    spark.sparkContext.parallelize(texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }, 4)
+      .toDF("rep", "text").createOrReplaceTempView("sh_texts")
+    val got = spark.sql("SELECT rep, simhash60(text) AS sh FROM sh_texts")
+    got.createOrReplaceTempView("sh_got")
+    val mismatches = spark.sql(
+      s"""SELECT count(*) FROM sh_got k
+         |LEFT JOIN ($reference) r ON k.rep = r.rep AND k.sh = r.sh
+         |WHERE r.rep IS NULL""".stripMargin).collect()(0).getLong(0)
+    assert(mismatches == 0L, s"simhash60 diverges from the SQL on $mismatches of ${texts.size} texts")
+    // the interpreted path agrees with the codegen'd one
+    val byRep = got.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    texts.zipWithIndex.foreach { case (t, i) =>
+      assert(SimHash60(org.apache.spark.sql.catalyst.expressions.Literal(t)).eval() == byRep(i.toLong),
+        s"interpreted simhash60 diverges on ${t.take(40).toList}")
+    }
   }
 
   test("min_gram_hash: under 4 codepoints -> null") {

@@ -19,7 +19,6 @@ class SimhashPassSpec extends AnyFunSuite {
     functions.registerAll(s)
     Engine.prepare(s, "/root/testdata/sf0.01")
     s.sql(Pipeline.simhashGroupsSql).createOrReplaceTempView("q45_g")
-    s.sql(Pipeline.simhashSketchSql).createOrReplaceTempView("q45_s")
     s
   }
 

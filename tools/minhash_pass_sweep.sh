@@ -10,7 +10,14 @@
 # Usage: tools/minhash_pass_sweep.sh SF_DIR CAND_DIR OUT_DIR [K]
 set -u
 SF_DIR=$1; CAND_DIR=$2; OUT_DIR=$3; K=${4:-12}
-MIN_FREE_GB=${MIN_FREE_GB:-20}
+# The 20 GB free-disk floor guards scale corpora (an SF_DIR of >= 1 GB,
+# the test tools/run_main.sh uses); a smaller corpus needs a few MB of
+# scratch, so its floor is 1 GB. MIN_FREE_GB overrides either.
+if [ "$(du -sb "$SF_DIR" 2>/dev/null | cut -f1 || echo 0)" -ge 1000000000 ] 2>/dev/null; then
+  MIN_FREE_GB=${MIN_FREE_GB:-20}
+else
+  MIN_FREE_GB=${MIN_FREE_GB:-1}
+fi
 FINISH_MODE=${FINISH_MODE:-finish}
 cd "$(dirname "$0")/.."
 mkdir -p "$CAND_DIR" "$OUT_DIR"

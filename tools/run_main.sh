@@ -28,7 +28,11 @@ if [ -z "${SPARK_GRAFT_OFFHEAP+x}" ] && [ -z "${GRAFT_NO_SCALE_PRESET:-}" ]; the
   done
 fi
 
-exec java -Xmx${JVM_XMX:-96g} ${JVM_OPTS:-} \
+# Default heap: half of MemTotal, at least 2g (the way the Tier-1 test
+# command sizes SPARK_DRIVER_MEM). JVM_XMX and the scale preset above win.
+JVM_XMX=${JVM_XMX:-$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g) "g"}' 2>/dev/null </proc/meminfo || echo 2g)}
+
+exec java -Xmx$JVM_XMX ${JVM_OPTS:-} \
   --add-opens=java.base/java.lang=ALL-UNNAMED \
   --add-opens=java.base/java.lang.invoke=ALL-UNNAMED \
   --add-opens=java.base/java.lang.reflect=ALL-UNNAMED \
