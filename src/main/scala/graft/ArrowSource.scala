@@ -16,10 +16,11 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.vectorized.{ArrowColumnVector, ColumnVector, ColumnarBatch}
 
 /** Native Arrow IPC (file-format) source/sink (DataSource V2
   * `TableProvider`), covering the reference's Arrow scan
@@ -34,17 +35,19 @@ import org.apache.spark.unsafe.types.UTF8String
   * reads each file's footer at planning time (cheap: footer + metadata
   * only) and emits one `InputPartition` PER RECORD-BATCH RANGE, so a big
   * file fans out across executors exactly like the reference's
-  * `FileGroupPartitioner` does for its ArrowExec. Column pruning is pushed
-  * into the reader: the IPC layout stores one buffer region per column
-  * within each batch, and the reader only CONVERTS the required columns
-  * (batch IO is footer-directed whole-batch here; a production reader
-  * would additionally slice per-column buffer reads from the batch
-  * metadata). Comparison predicates are pushed too
-  * (`SupportsPushDownFilters`, [[PushedRowFilters]], shared with
-  * [[AvroSource]]): rejected rows are skipped on the vector slots before
-  * any `InternalRow` is allocated, and every filter is also returned to
-  * Spark as a residual, so correctness never depends on the pushed
-  * evaluation.
+  * `FileGroupPartitioner` does for its ArrowExec.
+  *
+  * Reads are columnar (`supportColumnarReads`): each loaded batch is
+  * handed to Spark as a `ColumnarBatch` of `ArrowColumnVector`s over the
+  * reader's `VectorSchemaRoot`, with no per-row conversion and no copy, and
+  * Spark's `ColumnarToRow` feeds the rest of the plan. Column pruning
+  * wraps only the required vectors (batch IO is footer-directed
+  * whole-batch here; a production reader would additionally slice
+  * per-column buffer reads from the batch metadata). Comparison
+  * predicates are pushed (`SupportsPushDownFilters`, [[PushedRowFilters]]
+  * decides which) to skip whole batches through the zone maps below;
+  * every filter is also returned to Spark as a residual, which filters the
+  * rows.
   *
   * Types: long/int/double/float/boolean/string/binary, nullable — the
   * same primitive core as [[AvroSource]]; unsupported types fail loudly
@@ -233,88 +236,101 @@ object ArrowSource {
     * side's split unit), plus a `.zmap` zone-map sidecar with per-batch
     * min/max/null stats for the scan's data skipping. Local-mode tasks
     * share the driver filesystem, so plain file writes are the committer
-    * (same stance as [[AvroSource]]). */
+    * (same stance as [[AvroSource]]). Tasks fill the vectors from the
+    * plan's `InternalRow`s with one slot writer per column
+    * ([[slotWriter]]), under one SQL execution. */
   def write(df: DataFrame, dir: String, batchRows: Int = 8192): Unit = {
     new File(dir).mkdirs()
     listFiles(dir).foreach { f => zmapFile(f).delete(); f.delete(); () } // overwrite
     toArrowSchema(df.schema) // fail fast on the driver for unsupported types
     val schema = df.schema
-    val names = schema.fieldNames
     val numeric = schema.fields.map(_.dataType match {
       case LongType | IntegerType | DoubleType | FloatType => true
       case _ => false
     })
-    df.foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
-      if (rows.hasNext) {
-        val alloc = new RootAllocator()
-        val root = VectorSchemaRoot.create(toArrowSchema(schema), alloc)
-        val file = new File(s"$dir/part-${java.util.UUID.randomUUID()}.arrow")
-        val ch = FileChannel.open(file.toPath,
-          StandardOpenOption.CREATE, StandardOpenOption.WRITE)
-        val w = new ArrowFileWriter(root, null, ch)
-        val zones = Seq.newBuilder[BatchZone]
-        try {
-          w.start()
-          while (rows.hasNext) {
-            var n = 0
-            val mins = Array.fill(names.length)(Double.PositiveInfinity)
-            val maxs = Array.fill(names.length)(Double.NegativeInfinity)
-            val nulls = new Array[Long](names.length)
-            val sawNaN = new Array[Boolean](names.length)
-            while (rows.hasNext && n < batchRows) {
-              val row = rows.next()
-              var i = 0
-              while (i < names.length) {
-                val v = root.getVector(i)
-                if (row.isNullAt(i)) {
-                  nulls(i) += 1
-                  v match {
-                    case x: BaseFixedWidthVector => x.setNull(n)
-                    case x: BaseVariableWidthVector => x.setNull(n)
-                    case other => throw new IllegalStateException(s"vector $other")
-                  }
-                } else {
-                  var d = 0.0
-                  v match {
-                    case x: BigIntVector =>
-                      val l = row.getLong(i); x.setSafe(n, l); d = l.toDouble
-                    case x: IntVector =>
-                      val l = row.getInt(i); x.setSafe(n, l); d = l.toDouble
-                    case x: Float8Vector =>
-                      d = row.getDouble(i); x.setSafe(n, d)
-                    case x: Float4Vector =>
-                      val f = row.getFloat(i); x.setSafe(n, f); d = f.toDouble
-                    case x: BitVector => x.setSafe(n, if (row.getBoolean(i)) 1 else 0)
-                    case x: VarCharVector =>
-                      x.setSafe(n, row.getString(i).getBytes("UTF-8"))
-                    case x: VarBinaryVector => x.setSafe(n, row.getAs[Array[Byte]](i))
-                    case other => throw new IllegalStateException(s"vector $other")
-                  }
-                  if (numeric(i)) {
-                    if (d.isNaN) sawNaN(i) = true
-                    else {
-                      if (d < mins(i)) mins(i) = d
-                      if (d > maxs(i)) maxs(i) = d
-                    }
-                  }
-                }
-                i += 1
-              }
-              n += 1
-            }
-            root.setRowCount(n)
-            w.writeBatch()
-            root.allocateNew() // reset for the next batch
-            zones += BatchZone(n, names.indices.map { i =>
-              val valid = numeric(i) && !sawNaN(i) && nulls(i) < n
-              names(i) -> ZStat(valid, mins(i), maxs(i), nulls(i))
-            }.toMap)
-          }
-          w.end()
-        } finally { w.close(); ch.close(); root.close(); alloc.close() }
-        writeZmap(file, zones.result())
+    val qe = df.queryExecution
+    SQLExecution.withNewExecutionId(qe, Some("foreachPartition")) {
+      qe.toRdd.foreachPartition { rows =>
+        if (rows.hasNext) writePart(rows, schema, numeric, dir, batchRows)
       }
     }
+  }
+
+  private def writePart(rows: Iterator[InternalRow], schema: StructType,
+      numeric: Array[Boolean], dir: String, batchRows: Int): Unit = {
+    val names = schema.fieldNames
+    val alloc = new RootAllocator()
+    val root = VectorSchemaRoot.create(toArrowSchema(schema), alloc)
+    val file = new File(s"$dir/part-${java.util.UUID.randomUUID()}.arrow")
+    val ch = FileChannel.open(file.toPath,
+      StandardOpenOption.CREATE, StandardOpenOption.WRITE)
+    val w = new ArrowFileWriter(root, null, ch)
+    val zones = Seq.newBuilder[BatchZone]
+    try {
+      // the root keeps its vectors across allocateNew, so resolve once
+      val vectors = names.indices.map(root.getVector).toArray
+      val writers = vectors.map(slotWriter)
+      w.start()
+      while (rows.hasNext) {
+        var n = 0
+        val mins = Array.fill(names.length)(Double.PositiveInfinity)
+        val maxs = Array.fill(names.length)(Double.NegativeInfinity)
+        val nulls = new Array[Long](names.length)
+        val sawNaN = new Array[Boolean](names.length)
+        while (rows.hasNext && n < batchRows) {
+          val row = rows.next()
+          var i = 0
+          while (i < names.length) {
+            if (row.isNullAt(i)) {
+              nulls(i) += 1
+              vectors(i) match {
+                case x: BaseFixedWidthVector => x.setNull(n)
+                case x: BaseVariableWidthVector => x.setNull(n)
+                case other => throw new IllegalStateException(s"vector $other")
+              }
+            } else {
+              val d = writers(i)(row, i, n)
+              if (numeric(i)) {
+                if (d.isNaN) sawNaN(i) = true
+                else {
+                  if (d < mins(i)) mins(i) = d
+                  if (d > maxs(i)) maxs(i) = d
+                }
+              }
+            }
+            i += 1
+          }
+          n += 1
+        }
+        root.setRowCount(n)
+        w.writeBatch()
+        root.allocateNew() // reset for the next batch
+        zones += BatchZone(n, names.indices.map { i =>
+          val valid = numeric(i) && !sawNaN(i) && nulls(i) < n
+          names(i) -> ZStat(valid, mins(i), maxs(i), nulls(i))
+        }.toMap)
+      }
+      w.end()
+    } finally { w.close(); ch.close(); root.close(); alloc.close() }
+    writeZmap(file, zones.result())
+  }
+
+  /** Writes field `i` of a row (not null) into slot `n` of the vector, and
+    * returns the value as a double for the zone map (0 for non-numeric
+    * columns, which keep no min/max). Strings are set from a buffer over
+    * the `UTF8String`'s own bytes. */
+  private def slotWriter(v: FieldVector): (InternalRow, Int, Int) => Double = v match {
+    case x: BigIntVector => (r, i, n) => { val l = r.getLong(i); x.setSafe(n, l); l.toDouble }
+    case x: IntVector => (r, i, n) => { val l = r.getInt(i); x.setSafe(n, l); l.toDouble }
+    case x: Float8Vector => (r, i, n) => { val d = r.getDouble(i); x.setSafe(n, d); d }
+    case x: Float4Vector => (r, i, n) => { val f = r.getFloat(i); x.setSafe(n, f); f.toDouble }
+    case x: BitVector => (r, i, n) => { x.setSafe(n, if (r.getBoolean(i)) 1 else 0); 0.0 }
+    case x: VarCharVector => (r, i, n) =>
+      val b = r.getUTF8String(i).getByteBuffer
+      x.setSafe(n, b, b.position(), b.remaining())
+      0.0
+    case x: VarBinaryVector => (r, i, n) => { x.setSafe(n, r.getBinary(i)); 0.0 }
+    case other => throw new IllegalStateException(s"vector $other")
   }
 }
 
@@ -345,6 +361,9 @@ private class ArrowScan(required: StructType, path: String, batchesPerSplit: Int
     pushed: Array[Filter]) extends Scan with Batch {
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
+  // every partition reads columnar, also when zone maps prune them all
+  override def columnarSupportMode(): Scan.ColumnarSupportMode =
+    Scan.ColumnarSupportMode.SUPPORTED
   override def description(): String =
     s"ArrowScan $path, PushedFilters: [${pushed.mkString(", ")}], " +
       s"ReadSchema: ${required.catalogString}"
@@ -392,102 +411,55 @@ private class ArrowScan(required: StructType, path: String, batchesPerSplit: Int
     }.toArray
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new ArrowReaderFactory(required, pushed)
+    new ArrowReaderFactory(required)
 }
 
 private case class ArrowBatchRange(file: String, from: Int, until: Int)
     extends InputPartition
 
-private class ArrowReaderFactory(required: StructType, pushed: Array[Filter])
-    extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
+private class ArrowReaderFactory(required: StructType) extends PartitionReaderFactory {
+  override def supportColumnarReads(partition: InputPartition): Boolean = true
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+    throw new UnsupportedOperationException("ArrowSource reads are columnar")
+  override def createColumnarReader(partition: InputPartition): PartitionReader[ColumnarBatch] = {
     val p = partition.asInstanceOf[ArrowBatchRange]
-    new ArrowPartitionReader(p.file, p.from, p.until, required, pushed)
+    new ArrowPartitionReader(p.file, p.from, p.until, required)
   }
 }
 
+/** Loads the record batches `[from, until)` of one file, one at a time,
+  * into the reader's `VectorSchemaRoot` and returns them as one reused
+  * `ColumnarBatch` over the required vectors. Spark consumes a batch
+  * before asking for the next, which overwrites the vectors' buffers. */
 private class ArrowPartitionReader(file: String, from: Int, until: Int,
-    required: StructType, pushed: Array[Filter]) extends PartitionReader[InternalRow] {
+    required: StructType) extends PartitionReader[ColumnarBatch] {
   private val alloc = new RootAllocator()
   private val ch = FileChannel.open(new File(file).toPath, StandardOpenOption.READ)
   private val reader = new ArrowFileReader(ch, alloc)
   private val blocks = reader.getRecordBlocks
   private val root = reader.getVectorSchemaRoot
-  // prune at conversion: only the required columns are touched; a column
-  // that doesn't resolve (file schema drifted after planning) fails loudly
-  // here rather than as an opaque slot(-1) ArrayIndexOutOfBounds
-  private val indices = required.fieldNames.map { n =>
+  // prune by wrapping only the required vectors; a column that doesn't
+  // resolve (file schema drifted after planning) fails loudly here
+  private val batch = new ColumnarBatch(required.fieldNames.map { n =>
     val i = root.getSchema.getFields.asScala.indexWhere(_.getName == n)
     require(i >= 0, s"column '$n' missing from arrow file $file " +
       s"(schema ${root.getSchema}); all files must share one schema")
-    i
-  }
-  // pushed filters may reference pruned-away columns; the loaded batch
-  // still holds every vector, so resolve them against the full schema.
-  // A filter whose column doesn't resolve is not applied at all (keeping
-  // the row is always safe; dropping it never is).
-  private val allNames = root.getSchema.getFields.asScala.map(_.getName).toArray
-  private val nameIdx: Map[String, Int] = allNames.zipWithIndex.toMap
-  private val applicable = pushed.filter(_.references.forall(nameIdx.contains))
+    new ArrowColumnVector(root.getVector(i)): ColumnVector
+  })
   private var block = from
-  private var rowInBatch = 0
-  private var batchRows = 0
-  private var current: InternalRow = _
-
-  private def advanceBatch(): Boolean =
-    if (block >= until) false
-    else {
-      reader.loadRecordBatch(blocks.get(block))
-      block += 1
-      rowInBatch = 0
-      batchRows = root.getRowCount
-      if (batchRows == 0) advanceBatch() else true
-    }
-
-  private def slot(idx: Int, row: Int): Any = {
-    val v = root.getVector(idx)
-    if (v.isNull(row)) null
-    else v match {
-      case x: BigIntVector => x.get(row)
-      case x: IntVector => x.get(row)
-      case x: Float8Vector => x.get(row)
-      case x: Float4Vector => x.get(row)
-      case x: BitVector => x.get(row) == 1
-      case x: VarCharVector => UTF8String.fromBytes(x.get(row))
-      case x: VarBinaryVector => x.get(row)
-      case other => throw new IllegalStateException(s"vector $other")
-    }
-  }
-
-  private def filterGet(name: String): Any =
-    slot(nameIdx(name), rowInBatch) // applicable ⊆ resolvable by construction
 
   override def next(): Boolean = {
-    while (rowInBatch < batchRows || advanceBatch()) {
-      // pushed predicates run on the vector slots before any InternalRow
-      // is allocated; rejected rows are skipped in place
-      var keep = true
-      var f = 0
-      while (keep && f < applicable.length) {
-        keep = PushedRowFilters.eval(applicable(f), filterGet)
-        f += 1
-      }
-      if (keep) {
-        val vals = new Array[Any](indices.length)
-        var i = 0
-        while (i < indices.length) {
-          vals(i) = slot(indices(i), rowInBatch)
-          i += 1
-        }
-        current = InternalRow.fromSeq(vals.toIndexedSeq)
-        rowInBatch += 1
+    while (block < until) {
+      reader.loadRecordBatch(blocks.get(block))
+      block += 1
+      if (root.getRowCount > 0) {
+        batch.setNumRows(root.getRowCount)
         return true
       }
-      rowInBatch += 1
     }
     false
   }
 
-  override def get(): InternalRow = current
+  override def get(): ColumnarBatch = batch
   override def close(): Unit = { reader.close(); ch.close(); alloc.close() }
 }

@@ -25,7 +25,8 @@ import org.apache.spark.sql.types.{IntegerType, LongType}
   * values at distance ≤ k must agree on at least one whole band. The rule
   * rewrites the join to
   *
-  *  - posexplode a k+1-entry band array on each side,
+  *  - drop null sketches (they never satisfy the bound) and posexplode
+  *    a k+1-entry band array on each side,
   *  - equi-join on (band index, band value) — a shuffled hash join whose
   *    work is ∝ band collisions,
   *  - keep each qualifying pair exactly once by filtering to the FIRST
@@ -118,16 +119,19 @@ object HammingJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
           val (a, b, k) = hit.get
           val bds = bandPositions(k)
 
+          // a null sketch never satisfies bit_count(a ^ b) <= k, so the
+          // INNER join loses nothing when null rows are dropped below the
+          // explode; the band values then read a known-non-null sketch and
+          // compile without a null check per extracted bit
           def explodeBands(child: LogicalPlan, x: Attribute, tag: String)
               : (LogicalPlan, Attribute, Attribute) = {
-            val arr = CreateArray(bds.map(bandVal(x, _)))
+            val (input, sketch) =
+              if (x.nullable) (Filter(IsNotNull(x), child), KnownNotNull(x)) else (child, x)
+            val arr = CreateArray(bds.map(bandVal(sketch, _)))
             val pos = AttributeReference(s"__${tag}_band", IntegerType, nullable = false)()
-            // a null sketch yields null band values — the attr must say so
-            // (the join condition then drops those rows, same as the naive
-            // plan where bit_count(null ^ _) <= k is null)
-            val bv = AttributeReference(s"__${tag}_bv", LongType, nullable = x.nullable)()
+            val bv = AttributeReference(s"__${tag}_bv", LongType, nullable = false)()
             (Generate(PosExplode(arr), unrequiredChildIndex = Nil, outer = false,
-              qualifier = None, generatorOutput = Seq(pos, bv), child = child), pos, bv)
+              qualifier = None, generatorOutput = Seq(pos, bv), child = input), pos, bv)
           }
 
           val (lg, lpos, lbv) = explodeBands(left, a, "l")
@@ -142,9 +146,9 @@ object HammingJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
           // ~460M candidate rows through this filter and the re-assembly
           // form measured 226 s for the stage — the mask form is the same
           // predicate, round-14 measurement in BASELINE). A joined pair
-          // matches at least one band, so the CASE is never null for
-          // non-null sketches; a null sketch yields a null XOR → null CASE
-          // → the filter drops the row, exactly as the naive plan does.
+          // matches at least one band and both sketches are non-null
+          // (null ones are dropped below the explode), so the CASE is
+          // never null.
           val xorAB = BitwiseXor(a, b)
           val firstShared = CaseWhen(bds.zipWithIndex.map { case (ps, i) =>
             (EqualTo(BitwiseAnd(xorAB, Literal(ps.map(1L << _).reduce(_ | _))),
@@ -301,6 +305,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 }
 
 object GraftExtensions {
+  /** Every custom Catalyst function, for both wiring paths: builder-time
+    * [[GraftExtensions]] and `functions.registerAll` on a live session. */
   val functions: Seq[(String, Seq[Expression] => Expression)] = Seq(
     "greatest_ref" -> GreatestRef.build _,
     "gcd" -> Gcd.build _,
@@ -309,5 +315,6 @@ object GraftExtensions {
     "poly_hash" -> PolyHash.build _,
     "min_gram_hash" -> MinGramHash.build _,
     "token_lex_count" -> TokenLexCount.build _,
+    "simhash60" -> SimHash60.build _,
     "to_fixed" -> DoubleToFixed.build _)
 }

@@ -63,20 +63,20 @@ object GreatestRunner {
     if (common == NullType) return Seq.fill(n)(null) // all-null fast path (lib.rs:84-88)
 
     val names = columns.indices.map(i => s"c$i")
-    val schema = StructType(
-      StructField("idx", LongType, nullable = false) +:
-        names.zip(colTypes).map { case (nm, dt) =>
-          StructField(nm, if (dt == NullType) common else dt, nullable = true)
-        })
+    val schema = StructType(names.zip(colTypes).map { case (nm, dt) =>
+      StructField(nm, if (dt == NullType) common else dt, nullable = true)
+    })
     val rows: Seq[Row] = (0 until n).map { r =>
-      Row.fromSeq(r.toLong +: columns.indices.map(c => normalize(columns(c)(r), colTypes(c))))
+      Row.fromSeq(columns.indices.map(c => normalize(columns(c)(r), colTypes(c))))
     }
     functions.registerAll(spark)
-    val df = spark.createDataFrame(rows.asJava, schema)
-    df.select(col("idx"), functions.greatest_ref(names.map(col): _*).as("g"))
-      .orderBy(col("idx"))
+    // a projection over a local relation keeps its input order, and the
+    // optimizer folds it into the relation (ConvertToLocalRelation), so
+    // no Spark job runs
+    spark.createDataFrame(rows.asJava, schema)
+      .select(functions.greatest_ref(names.map(col): _*).as("g"))
       .collect()
       .toSeq
-      .map(_.get(1))
+      .map(_.get(0))
   }
 }

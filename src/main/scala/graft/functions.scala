@@ -80,15 +80,9 @@ object functions {
     val reg = spark.sessionState.functionRegistry
     if (reg.functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier("weighted_median")))
       return
-    reg.createOrReplaceTempFunction("greatest_ref", GreatestRef.build, "built-in")
-    reg.createOrReplaceTempFunction("gcd", Gcd.build, "built-in")
-    reg.createOrReplaceTempFunction("lcm", Lcm.build, "built-in")
-    reg.createOrReplaceTempFunction("dot_product", DotProduct.build, "built-in")
-    reg.createOrReplaceTempFunction("poly_hash", PolyHash.build, "built-in")
-    reg.createOrReplaceTempFunction("min_gram_hash", MinGramHash.build, "built-in")
-    reg.createOrReplaceTempFunction("token_lex_count", TokenLexCount.build, "built-in")
-    reg.createOrReplaceTempFunction("simhash60", SimHash60.build, "built-in")
-    reg.createOrReplaceTempFunction("to_fixed", DoubleToFixed.build, "built-in")
+    GraftExtensions.functions.foreach { case (name, builder) =>
+      reg.createOrReplaceTempFunction(name, builder, "built-in")
+    }
     // Typed Aggregator UDAF (SURVEY §2.8 AggregateUDFImpl surface).
     spark.udf.register("weighted_median",
       F.udaf(new WeightedPercentile(0.5), org.apache.spark.sql.Encoders.product[VW]))

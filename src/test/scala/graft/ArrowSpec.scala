@@ -44,6 +44,31 @@ class ArrowSpec extends AnyFunSuite {
     assert(got(2).getDouble(3) === 1e100)
   }
 
+  test("reads are columnar and round-trip all seven types, nulls, multibyte strings and binary") {
+    val out = tmp("columnar")
+    val strs = Seq("ünïcödé-€", "𐀀", "日本語", "", null, "ß" * 40)
+    val data = strs.zipWithIndex.map { case (str, i) =>
+      if (str == null) Row(i.toLong, null, null, null, null, null, null)
+      else Row(i.toLong, i - 2, i * 0.5f, i * 1e10, i % 2 == 0, str,
+        Array.tabulate[Byte](i * 3)(j => (j * 7 + i).toByte))
+    }
+    ArrowSource.write(spark.createDataFrame(spark.sparkContext.parallelize(data, 2), schema),
+      out, batchRows = 2)
+    val back = spark.read.format("graft.ArrowSource").load(out)
+    val plan = back.queryExecution.executedPlan
+    assert(plan.exists(_.isInstanceOf[org.apache.spark.sql.execution.ColumnarToRowExec]),
+      s"expected ColumnarToRow over the scan:\n$plan")
+    val scans = plan.collect { case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b }
+    assert(scans.nonEmpty && scans.forall(_.supportsColumnar), s"expected a columnar batch scan:\n$plan")
+    val got = back.collect().sortBy(_.getLong(0))
+    assert(got.length === data.length)
+    got.zip(data).foreach { case (g, e) =>
+      (0 until 6).foreach(c => assert(g.get(c) === e.get(c), s"row ${e.getLong(0)} col $c"))
+      if (e.isNullAt(6)) assert(g.isNullAt(6))
+      else assert(g.getAs[Array[Byte]](6).toSeq === e.getAs[Array[Byte]](6).toSeq)
+    }
+  }
+
   test("record-batch splitting: one file, many batches → many partitions, exactly-once rows") {
     val out = tmp("split")
     val df = spark.range(50000).select(col("id"), (col("id") * 3).as("v"))

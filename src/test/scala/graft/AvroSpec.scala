@@ -76,8 +76,51 @@ class AvroSpec extends AnyFunSuite {
     assert(back.count() === 50000)
     assert(back.agg(sum("id")).head.getLong(0) === 49999L * 50000 / 2)
     assert(back.select("id").distinct().count() === 50000)
-    // default split size leaves the small-file path unchanged
-    assert(spark.read.format("graft.AvroSource").load(out).rdd.getNumPartitions === 1)
+  }
+
+  test("default split: a small file stays whole, a ~1.8 MB file fans out over the cores") {
+    assert(spark.sparkContext.defaultParallelism === 4, "the spec's session is local[4]")
+    val small = tmp("split_small")
+    AvroSource.write(spark.range(1000).select(col("id")).coalesce(1), small)
+    assert(AvroSource.listFiles(small).head.length() < 256 * 1024)
+    assert(spark.read.format("graft.AvroSource").load(small).rdd.getNumPartitions === 1)
+    val out = tmp("split_default")
+    val df = spark.range(50000).select(col("id"),
+      concat(lit("pad-pad-pad-pad-pad-pad-"), col("id")).as("pad"))
+    AvroSource.write(df.coalesce(1), out)
+    val fileLen = AvroSource.listFiles(out).head.length()
+    assert(fileLen > 1500000 && fileLen < 2200000, s"expected a ~1.8 MB file, got $fileLen")
+    // ⌈len / 4⌉-byte ranges: 4 partitions, every block read exactly once
+    val back = spark.read.format("graft.AvroSource").load(out)
+    assert(back.rdd.getNumPartitions === 4)
+    assert(back.count() === 50000)
+    assert(back.agg(sum("id")).head.getLong(0) === 49999L * 50000 / 2)
+    assert(back.select("id").distinct().count() === 50000)
+    // the splitSize option still overrides the rule
+    assert(spark.read.format("graft.AvroSource").option("splitSize", 16L << 20)
+      .load(out).rdd.getNumPartitions === 1)
+  }
+
+  test("multibyte strings and bytes survive record reuse, with no aliasing across rows") {
+    val out = tmp("reuse")
+    // lengths go down and up again, so a reused decoder buffer would leave
+    // a longer row's tail in a shorter one
+    val strs = Seq("ünïcödé-lóng-strîng-€€€", "𐀀", "日本語テキスト", "", "a", null, "ß" * 40, "x")
+    val data = strs.zipWithIndex.map { case (str, i) =>
+      Row(i.toLong, str, if (str == null) null else Array.tabulate[Byte](i * 3)(j => (j * 7 + i).toByte))
+    }
+    val sch = StructType(Seq(
+      StructField("id", LongType, nullable = false),
+      StructField("s", StringType, nullable = true),
+      StructField("bin", BinaryType, nullable = true)))
+    AvroSource.write(spark.createDataFrame(spark.sparkContext.parallelize(data, 1), sch), out)
+    val got = spark.read.format("graft.AvroSource").load(out).collect().sortBy(_.getLong(0))
+    assert(got.length === data.length)
+    got.zip(data).foreach { case (g, e) =>
+      assert(g.get(1) === e.get(1))
+      if (e.isNullAt(2)) assert(g.isNullAt(2))
+      else assert(g.getAs[Array[Byte]](2).toSeq === e.getAs[Array[Byte]](2).toSeq)
+    }
   }
 
   test("column pruning is pushed into the scan") {

@@ -236,4 +236,62 @@ class GreatestSpec extends AnyFunSuite {
     val ex = intercept[Exception] { GreatestRunner.run(spark, Seq(Seq(1))) }
     assert(ex.getMessage.contains("at least 2 columns"))
   }
+
+  test("runGreatest on 2000 x 8 mixed values runs no Spark job and keeps input order") {
+    val rnd = new scala.util.Random(15)
+    val n = 2000
+    val allNullRow = 1234
+    // column c holds Ints (c % 3 == 0), Longs (1) or Doubles with NaN (2)
+    val columns: Seq[Seq[Any]] = (0 until 8).map { c =>
+      (0 until n).map { r =>
+        val x = rnd.nextInt(2000000) - 1000000
+        if (r == allNullRow || rnd.nextDouble() < 0.1) null
+        else c % 3 match {
+          case 0 => x
+          case 1 => x.toLong * 1000003L
+          case _ => if (rnd.nextDouble() < 0.02) Double.NaN else x / 7.0
+        }
+      }
+    }
+    val sc = spark.sparkContext
+    val group = "greatest-runner-zero-jobs"
+    sc.setJobGroup(group, "GreatestRunner.run")
+    val got =
+      try GreatestRunner.run(spark, columns)
+      finally sc.clearJobGroup()
+    assert(sc.statusTracker.getJobIdsForGroup(group).isEmpty, "the runner must not run a job")
+
+    // the previous DataFrame path: an idx column, greatest_ref, orderBy(idx)
+    val types = (0 until 8).map(c => if (c % 3 == 2) DoubleType else LongType)
+    val schema = StructType(StructField("idx", LongType, nullable = false) +:
+      types.zipWithIndex.map { case (t, c) => StructField(s"c$c", t, nullable = true) })
+    val rows = (0 until n).map { r =>
+      Row.fromSeq(r.toLong +: columns.map(_(r) match {
+        case i: Int => i.toLong
+        case v => v
+      }))
+    }
+    functions.registerAll(spark)
+    val names = (0 until 8).map(c => col(s"c$c"))
+    val old = df(schema, rows).select(col("idx"), functions.greatest_ref(names: _*).as("g"))
+      .orderBy(col("idx")).collect().toSeq.map(_.get(1))
+    def same(a: Any, b: Any) = (a, b) match {
+      case (x: Double, y: Double) => x.equals(y) // NaN equals NaN
+      case _ => a == b
+    }
+    assert(got.size === n)
+    assert(got.zip(old).forall { case (a, b) => same(a, b) })
+    assert(got(allNullRow) == null)
+    assert(got.exists { case d: Double => d.isNaN; case _ => false })
+    // and an independent answer per row: nulls skipped, NaN greatest
+    (0 until n).foreach { r =>
+      val xs = columns.flatMap(c => Option(c(r))).map {
+        case i: Int => i.toDouble
+        case l: Long => l.toDouble
+        case d: Double => d
+      }
+      val exp = if (xs.isEmpty) null else if (xs.exists(_.isNaN)) Double.NaN else xs.max
+      assert(same(got(r), exp), s"row $r")
+    }
+  }
 }

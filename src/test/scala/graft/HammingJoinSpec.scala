@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Specs for [[HammingJoinRewrite]]: the naive `bit_count(a ^ b) <= k`
@@ -55,6 +57,27 @@ class HammingJoinSpec extends AnyFunSuite {
       Set((1L, 2L), (1L, 5L), (1L, 6L), (2L, 5L), (2L, 6L), (5L, 6L)))
   }
 
+  test("a nullable sketch with null rows: same pairs as the naive plan, non-null band values") {
+    import spark.implicits._
+    Seq[(Long, Option[Long])]((1L, Some(0L)), (2L, None), (3L, Some(7L)), (4L, None),
+      (5L, Some(1L)), (6L, Some(0xFF00L)))
+      .toDF("id", "sh").createOrReplaceTempView("hjn")
+    val q =
+      """SELECT a.id AS ia, b.id AS ib FROM hjn a JOIN hjn b
+        |ON bit_count(a.sh ^ b.sh) <= 4 AND a.id < b.id ORDER BY ia, ib""".stripMargin
+    val df = spark.sql(q)
+    val bv = df.queryExecution.optimizedPlan.collect { case g: org.apache.spark.sql.catalyst.plans.logical.Generate =>
+      g.generatorOutput.filter(_.name == "__l_bv") }.flatten
+    assert(bv.nonEmpty && bv.forall(!_.nullable), s"__l_bv must be non-nullable: $bv")
+    val got = df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    spark.conf.set(HammingJoinRewrite.EnabledConf, "false")
+    val exp =
+      try spark.sql(q).collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+      finally spark.conf.set(HammingJoinRewrite.EnabledConf, "true")
+    assert(got === exp)
+    assert(got.toSet === Set((1L, 3L), (1L, 5L), (3L, 5L)))
+  }
+
   test("joins with an existing equi-key are left alone") {
     mkTable()
     val q =
@@ -84,6 +107,13 @@ class HammingJoinSpec extends AnyFunSuite {
         "SELECT greatest_ref(1, 2), gcd(12L, 18L), poly_hash('abcd')").collect()(0)
       assert(r.getInt(0) == 2 && r.getLong(1) == 6L)
       assert(r.getLong(2) == ("abcd".foldLeft(0L)((a, c) => (a * 31 + c) % 2147483647L)))
+      // the one function list: every name resolves, simhash60 included
+      GraftExtensions.functions.foreach { case (name, _) =>
+        assert(fresh.sessionState.functionRegistry.functionExists(FunctionIdentifier(name)),
+          s"$name is not registered")
+      }
+      assert(fresh.sql("SELECT simhash60('near dup text')").head.getLong(0) ===
+        Fingerprints.simhash60(UTF8String.fromString("near dup text")))
     } finally {
       SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()
       savedDefault.foreach(SparkSession.setDefaultSession)
