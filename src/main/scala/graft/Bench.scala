@@ -4,7 +4,7 @@ import org.apache.spark.metrics.source.CodegenMetrics
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = Engine.cpus.toString
     // Scale knobs shared with Engine.session and Verify (Engine.envKnobs,
     // VERDICT r10 "what's wrong" #3). The per-round sf0.1 run sets none
     // of them, keeping BENCH_r{N} comparable across rounds.

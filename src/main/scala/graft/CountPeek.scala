@@ -25,8 +25,7 @@ object CountPeek {
   def main(args: Array[String]): Unit = {
     val sf = args(0)
     val noop = args.lift(1).contains("noop")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Engine.session(s"local[$cpus]")
+    val spark = Engine.session()
     args.drop(if (noop) 2 else 1).foreach { name =>
       val t0 = System.nanoTime()
       if (noop) {

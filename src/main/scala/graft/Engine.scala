@@ -83,7 +83,12 @@ object Engine {
   def scratchDir(tag: String, dir: String): String =
     s"$tmpDir/${tag}_${dir.replaceAll("[^a-zA-Z0-9]", "_")}"
 
-  def session(master: String = "local[32]"): SparkSession = {
+  /** Cores of a graft-built local session: `SPARK_GRAFT_CPUS`, else every
+    * core the JVM sees. Every main reads the variable through this. */
+  lazy val cpus: Int =
+    sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt).getOrElse(Runtime.getRuntime.availableProcessors)
+
+  def session(master: String = s"local[$cpus]"): SparkSession = {
     val s = envKnobs(SparkSession.builder()
       .master(master)
       .appName("graft")

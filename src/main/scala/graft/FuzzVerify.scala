@@ -23,7 +23,7 @@ import java.nio.file.{Files, Paths}
 object FuzzVerify {
   def main(args: Array[String]): Unit = {
     val Array(queriesJson, outDir) = args.take(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = Engine.cpus.toString
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

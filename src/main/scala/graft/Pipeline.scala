@@ -120,7 +120,7 @@ object Pipeline {
   /** Stages 1-2 of the prefix-filter join as ONE standalone statement: the
     * px relation (rep, sz, gr), each set's rare-first prefix. Every caller
     * materializes it once (graftCkpt) — the q46/q66 entries and each
-    * [[NgramPassRun]] pass JVM alike — because the stage-3 self-join
+    * [[PassRun]] n-gram pass JVM alike — because the stage-3 self-join
     * references px on both sides and Catalyst inlines CTEs: inline, px is
     * computed once per self-join SIDE (measured round 16: the two ~1.4 s
     * jobs that dominated q46 at sf0.1). Counting the stage-3 enumeration
@@ -209,28 +209,17 @@ object Pipeline {
       broadcast: Boolean = true, passWhere: String = ""): String =
     s"""WITH ${ngramCandSql(pxView, passWhere)},
        |${ngramVerifySql("cand", groupsView, broadcast)}""".stripMargin
-  /** Expansion tail (cross-pair + self-clique CTEs and the final UNION) as
-    * a reusable fragment over any verified content-pairs relation — shared
-    * by the production q46 plan and NgramPassRun's finish stage, so the
-    * K-pass path expands with EXACTLY the production SQL. */
-  private[graft] def ngramExpandTailSql(cpView: String, groupsView: String,
-      cfg: ExpandCfg): String =
-    s"""xc AS (
-       |${crossPairExpand(cpView, groupsView,
-           "least(ia, ib) AS da, greatest(ia, ib) AS db, jacc", ", cp.jacc", cfg)}),
-       |sp AS (
-       |${selfCliqueExpand(groupsView,
-           "ia AS da, ib AS db, cast(1.0 AS DOUBLE) AS jacc", "", "", cfg)})
-       |SELECT da, db, jacc FROM xc
-       |UNION ALL
-       |SELECT da, db, jacc FROM sp""".stripMargin
+  // the tail goes through a CTE so q46's plan keeps the CTE reference's
+  // no-op `jacc AS jacc` alias and stays identical to its recorded form
   private def ngramPairsSql(pxView: String, groupsView: String,
       cfg: ExpandCfg, broadcast: Boolean = true): String =
     s"""WITH cp AS (
        |  SELECT * FROM (
        |${ngramContentPairsSql(pxView, groupsView, broadcast)}
        |  ) _cp),
-       |${ngramExpandTailSql("cp", groupsView, cfg)}""".stripMargin
+       |pairs AS (
+       |${pairExpandSql(Some("cp"), groupsView, "jacc", "cast(1.0 AS DOUBLE)", cfg)})
+       |SELECT da, db, jacc FROM pairs""".stripMargin
   /** Chunk-parallel membership expansion (round 11). Collapse-first leaves
     * exactly one quadratic stage — expanding distinct-content groups back
     * to id-level pairs — and its naive form (`LATERAL VIEW explode(ids) ×
@@ -417,6 +406,24 @@ object Pipeline {
        |LATERAL VIEW explode(sb) tb AS ib""".stripMargin
   }
 
+  /** The id-level tail of the collapse-first dedups (q44, q45, q46 and
+    * [[PassRun]]): pairs (da, db, `score`) from [[crossPairExpand]] over
+    * the content pairs in `cpView`, each carrying its own score, and from
+    * [[selfCliqueExpand]] over every group, whose identical contents score
+    * `selfScore`. The entries take both branches; a K-pass run appends
+    * each pass's cross pairs (`clique = false`) and the cliques once
+    * (`cpView = None`). */
+  private[graft] def pairExpandSql(cpView: Option[String], groupsView: String,
+      score: String, selfScore: String, cfg: ExpandCfg, clique: Boolean = true): String = {
+    val branches = cpView.map(crossPairExpand(_, groupsView,
+        s"least(ia, ib) AS da, greatest(ia, ib) AS db, $score", s", cp.$score", cfg)) ++
+      Option.when(clique)(selfCliqueExpand(groupsView,
+        s"ia AS da, ib AS db, $selfScore AS $score", "", "", cfg))
+    require(branches.nonEmpty, "pairExpandSql: neither branch selected")
+    s"""SELECT da, db, $score FROM (
+       |${branches.mkString("\n  UNION ALL\n")}) u""".stripMargin
+  }
+
   private def ngramGramsDuck: String =
     s"""SELECT doc_id,
        |  list_distinct(list_transform(range(1, length(text) - 2),
@@ -530,7 +537,7 @@ object Pipeline {
   // bounded by the answer itself. The verified content pairs are
   // checkpointed so the expansion copies jacc instead of recomputing
   // the array-intersect per emitted row.
-  // (private[graft]: MinhashPassRun and MinhashPassSpec rebuild these
+  // (private[graft]: PassRun and MinhashPassSpec rebuild these
   // views; the verify stage's measured broadcast bytes are in BASELINE
   // §broadcast-slice ceiling.)
   private[graft] val minhashGroupsSql =
@@ -577,19 +584,6 @@ object Pipeline {
        |          JOIN (SELECT rep, h FROM q44_sig) y ON y.rep = rb
        |WHERE round(size(array_intersect(x.h, y.h)) / size(array_union(x.h, y.h)), 6) >= 0.6""".stripMargin
 
-  // sp's jacc is identically 1.0: x.h == y.h, so intersect == union
-  // (h is already array_distinct'd and non-empty under the >= 3 filter)
-  /** Doc-level expansion tail of q44 over a verified content-pair view
-    * plus the q44_g groups view; ends with the production ORDER BY. */
-  private[graft] def minhashExpandSql(cpView: String, cfg: ExpandCfg): String =
-    s"""SELECT da, db, jacc FROM (
-       |${crossPairExpand(cpView, "q44_g",
-           "least(ia, ib) AS da, greatest(ia, ib) AS db, jacc", ", cp.jacc", cfg)}
-       |  UNION ALL
-       |${selfCliqueExpand("q44_g",
-           "ia AS da, ib AS db, cast(1.0 AS DOUBLE) AS jacc", "", "", cfg)}) u
-       |ORDER BY da, db""".stripMargin
-
   private val dedupMinhash = {
     val groupsSpark = minhashGroupsSql
     val hsSigSpark = minhashSigSql
@@ -611,7 +605,6 @@ object Pipeline {
     def contentPairsSpark(broadcast: Boolean) =
       s"""${minhashCandSql("")}
          |${minhashVerifySql(broadcast)}""".stripMargin
-    def expandSpark(cfg: ExpandCfg) = minhashExpandSql("q44_cp", cfg)
     val duck =
       s"""$shinglesDuck,
          |sig AS (
@@ -633,7 +626,10 @@ object Pipeline {
       s.sql(hsSigSpark).graftCkptView("q44_sig")
       s.sql(contentPairsSpark(broadcastVerify(s))).graftCkpt()
         .createOrReplaceTempView("q44_cp")
-      s.sql(expandSpark(expandCfg(s, dir)))
+      // sp's jacc is identically 1.0: x.h == y.h, so intersect == union
+      // (h is already array_distinct'd and non-empty under the >= 3 filter)
+      s.sql(pairExpandSql(Some("q44_cp"), "q44_g", "jacc", "cast(1.0 AS DOUBLE)",
+        expandCfg(s, dir)) + "\nORDER BY da, db")
     }
   }
 
@@ -715,20 +711,14 @@ object Pipeline {
     * [[HammingJoinRewrite]] pattern-matches — the rewrite still fires
     * (SimhashPassSpec asserts the banded plan) and the filter sits
     * below the join by construction. Every unordered pair lands in
-    * exactly one pass via its SMALLER rep. */
+    * exactly one pass via its SMALLER rep. The subquery names its table
+    * `a` too, so the filter reads `pmod(hash(a.rep), K) = i` as q44's and
+    * q46's do. */
   private[graft] def simhashContentPairPassSql(passFilter: String): String =
     s"""SELECT a.rep AS ra, b.rep AS rb,
        |  cast(bit_count(a.sh ^ b.sh) AS BIGINT) AS hamming
-       |FROM (SELECT * FROM q45_g WHERE $passFilter) a JOIN q45_g b
+       |FROM (SELECT * FROM q45_g a WHERE $passFilter) a JOIN q45_g b
        |  ON bit_count(a.sh ^ b.sh) <= 8 AND a.rep < b.rep""".stripMargin
-  private[graft] def simhashExpandSql(cfg: ExpandCfg) =
-    s"""SELECT da, db, hamming FROM (
-       |${crossPairExpand("q45_cp", "q45_g",
-           "least(ia, ib) AS da, greatest(ia, ib) AS db, hamming", ", cp.hamming", cfg)}
-       |  UNION ALL
-       |${selfCliqueExpand("q45_g",
-           "ia AS da, ib AS db, cast(0 AS BIGINT) AS hamming", "", "", cfg)}) u
-       |ORDER BY da, db""".stripMargin
 
   private val dedupSimhash = {
     val duck =
@@ -750,7 +740,8 @@ object Pipeline {
     e("q45_dedup_simhash", duck) { (s, dir) =>
       s.sql(simhashGroupsSql).graftCkptView("q45_g")
       s.sql(simhashContentPairSql).graftCkptView("q45_cp")
-      s.sql(simhashExpandSql(expandCfg(s, dir)))
+      s.sql(pairExpandSql(Some("q45_cp"), "q45_g", "hamming", "cast(0 AS BIGINT)",
+        expandCfg(s, dir)) + "\nORDER BY da, db")
     }
   }
 
@@ -1320,7 +1311,7 @@ object Pipeline {
 
   /** q66's components tail over a verified content-pairs relation `cpRel`
     * (a view name or a parenthesized query) and its groups view — shared by
-    * the q66 entry and [[NgramPassRun]]'s finish stage. Edges are the
+    * the q66 entry and [[PassRun]]'s n-gram finish. Edges are the
     * content pairs plus a self-loop per multi-member group (membership
     * alone puts a group's ids in the node set); after Hash-Min, each
     * group's member list is exploded once and aggregated per component —

@@ -35,7 +35,7 @@ object R17SqlAb {
     val Seq(a, b) = args.take(2).toSeq
     val sf = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val reps = sys.env.getOrElse("REPS", "3").toInt
-    val spark = Engine.session(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
+    val spark = Engine.session()
     Engine.prepare(spark, sf)
     if (!sys.env.get("SKIP_EQ").contains("1")) {
       val (da, db) = (spark.sql(a), spark.sql(b))

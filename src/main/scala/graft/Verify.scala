@@ -44,7 +44,7 @@ object Verify {
       case Some(s) => s.split(",").map(_.trim).filter(_.nonEmpty).toSet
       case None => Set.empty
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = Engine.cpus.toString
     // Scale knobs shared with Engine.session (Engine.envKnobs); with none
     // set, sf0.1 runs keep the plain on-heap session with one shuffle
     // partition per core.

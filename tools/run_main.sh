@@ -1,9 +1,11 @@
 #!/bin/bash
 # Run a graft main against the compiled classes without holding the sbt lock.
 # Usage: tools/run_main.sh graft.Verify <args...>
-# GRAFT_CLASSES overrides the classes dir — point it at a snapshot copy so a
-# long-running background probe keeps a stable classpath while sbt recompiles.
-CP="${GRAFT_CLASSES:-/root/repo/target/scala-2.13/classes}:$(ls /opt/spark/jars/*.jar | tr '\n' ':')$(ls /root/repo/lib/*.jar 2>/dev/null | tr '\n' ':')"
+# Classes and lib/ come from the checkout this script sits in. GRAFT_CLASSES
+# overrides the classes dir — point it at a snapshot copy so a long-running
+# background probe keeps a stable classpath while sbt recompiles.
+ROOT=$(cd "$(dirname "$0")/.." && pwd)
+CP="${GRAFT_CLASSES:-$ROOT/target/scala-2.13/classes}:$(ls /opt/spark/jars/*.jar | tr '\n' ':')$(ls "$ROOT"/lib/*.jar 2>/dev/null | tr '\n' ':')"
 
 # Scale-corpus autodetect (VERDICT r10 #4): when any arg is a >=1 GB data
 # dir (x100 is 1.7 GB, x1000 17 GB; driver sf dirs top out at 17 MB and
