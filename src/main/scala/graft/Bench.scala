@@ -1,24 +1,24 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.metrics.source.CodegenMetrics
+import scala.util.control.NonFatal
 object Bench {
+  /** Seconds `run` takes, or the -1.0 sentinel when it throws a non-fatal
+    * error (reported by `onFail`). A fatal JVM error (OOM, stack overflow)
+    * propagates: timing on in a damaged JVM would only record noise. */
+  private[graft] def timed(onFail: Throwable => Unit)(run: => Unit): Double = {
+    val t0 = System.nanoTime()
+    try { run; (System.nanoTime() - t0) / 1e9 }
+    catch { case NonFatal(e) => onFail(e); -1.0 }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = Engine.cpus.toString
-    // Scale knobs shared with Engine.session and Verify (Engine.envKnobs,
-    // VERDICT r10 "what's wrong" #3). The per-round sf0.1 run sets none
-    // of them, keeping BENCH_r{N} comparable across rounds.
-    val spark = Engine.envKnobs(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", Engine.warehouseDir), defaultPartitions = cpus)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Engine.session()
     // Untimed warmup: first-job scheduler init, parquet footer reads, and
     // codegen-compiler startup otherwise land on whichever query happens to
     // run first (~6s attributed to an arbitrary query).
     Engine.prepare(spark, sfDir)
-    Engine.tableNames.foreach(t => try { spark.table(t).count() } catch { case _: Throwable => () })
+    Engine.tableNames.foreach(t => try { spark.table(t).count() } catch { case NonFatal(_) => () })
     // Default: min of two runs per query — the first run carries one-time
     // codegen compilation for that query's operators, the min approximates
     // steady-state (the regime that matters at scale, where per-query
@@ -86,18 +86,15 @@ object Bench {
     val compiled = (1 to reps).map { _ =>
       val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       for ((name, fn) <- entries) {
-        val t0 = System.nanoTime()
-        val t = try {
+        // a failure must be VISIBLE, not a fast fake result: record a
+        // sentinel, report on stderr, surface a count in the total line
+        val t = timed { e =>
+          if (!failures.contains(name)) failures ::= name
+          System.err.println(s"[bench] $name FAILED: ${String.valueOf(e.getMessage).take(200)}")
+        } {
           val df = fn(spark, sfDir)
           if (countOnly(name)) { df.count(); () }
           else df.write.format("noop").mode("overwrite").save()
-          (System.nanoTime() - t0) / 1e9
-        } catch { case e: Throwable =>
-          // a failure must be VISIBLE, not a fast fake result: record a
-          // sentinel, report on stderr, surface a count in the total line
-          if (!failures.contains(name)) failures ::= name
-          System.err.println(s"[bench] $name FAILED: ${e.getMessage.take(200)}")
-          -1.0
         }
         samples(name) = samples.getOrElse(name, Vector.empty) :+ t
       }
@@ -130,7 +127,7 @@ object Bench {
       java.nio.file.Files.writeString(
         java.nio.file.Paths.get("target/bench_queries.json"),
         s"""{"total":$total,"queries":$qs$exclNote,"sf":"$sfDir"}""")
-    } catch { case _: Throwable => () }
+    } catch { case NonFatal(_) => () }
     println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","failed":${failures.size}$exclNote%s,"sf":"$sfDir"}""")
     spark.stop()
   }

@@ -43,9 +43,10 @@ import org.apache.spark.sql.types.{IntegerType, LongType}
   * columns from opposite inputs) and no existing equi-join conjunct (if
   * one exists, the hash join on it is already fine — and the guard also
   * makes the rewrite non-reapplicable, since the rewritten join is
-  * equi-keyed). Registered builder-time via [[GraftExtensions]] and
-  * injected into foreign live sessions (the driver's) through
-  * `experimentalMethods.extraOptimizations` in `Engine.prepare`.
+  * equi-keyed). `Engine.wireSession` appends it to
+  * `experimentalMethods.extraOptimizations` of every session graft builds
+  * or prepares; [[GraftExtensions]] injects it builder-time for sessions
+  * graft does not build.
   *
   * Skew contract (measured, BASELINE.md "Banded-join skew"): the rewrite
   * makes CANDIDATE GENERATION distributable (shuffle ∝ band collisions),
@@ -284,16 +285,16 @@ object BroadcastSemiJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
     }
 }
 
-/** Builder-time wiring of the whole library into a session
-  * (`SparkSession.builder.withExtensions(new GraftExtensions)` or config
-  * `spark.sql.extensions=graft.GraftExtensions`): all custom Catalyst
-  * functions plus the [[HammingJoinRewrite]] optimizer rule — the
+/** Builder-time wiring of the library into a session graft does not
+  * build (`spark.sql.extensions=graft.GraftExtensions`): all custom
+  * Catalyst functions plus the [[HammingJoinRewrite]] optimizer rule — the
   * `SparkSessionExtensions` integration surface of SURVEY §2.8 (≙ the
   * reference's `SessionContext::register_udf` at
   * `datafusion/core/src/execution/context/mod.rs:1117` +
-  * `SessionContext::add_optimizer_rule` at `:456`). Sessions built
-  * elsewhere (the driver's) get the same registrations at first use
-  * through `Engine.prepare`. */
+  * `SessionContext::add_optimizer_rule` at `:456`). Graft's own sessions
+  * and every prepared one are wired by `Engine.wireSession` instead;
+  * `Engine.prepare` on an extensions-built session adds the rest, and the
+  * rule's second copy is a no-op. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     GraftExtensions.functions.foreach { case (name, builder) =>

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Differential-fuzz runner: executes a generated query file
@@ -23,15 +22,7 @@ import java.nio.file.{Files, Paths}
 object FuzzVerify {
   def main(args: Array[String]): Unit = {
     val Array(queriesJson, outDir) = args.take(2)
-    val cpus = Engine.cpus.toString
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", Engine.warehouseDir)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Engine.session()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     Engine.prepare(spark, sfDir)
     new java.io.File(outDir).mkdirs()

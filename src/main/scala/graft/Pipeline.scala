@@ -189,7 +189,7 @@ object Pipeline {
   /** Exact-Jaccard verify + threshold over a candidate relation. The
     * broadcast hint is conf-gated (see [[broadcastVerify]]): past the
     * broadcast ceiling (BASELINE §broadcast-slice ceiling) callers flip
-    * `graft.verify.broadcast=false` and the same SQL degrades to the
+    * `spark.graft.verify.broadcast=false` and the same SQL degrades to the
     * shuffled verify instead of hard-failing on the 8 GB broadcast limit. */
   private[graft] def ngramVerifySql(candRel: String, groupsView: String,
       broadcast: Boolean = true): String =
@@ -248,17 +248,16 @@ object Pipeline {
     * for the self-clique), and the `ia < ib` filter keeps exactly the
     * strict upper triangle — it is vacuously true on off-diagonal tiles of
     * the sorted array and prunes the diagonal tiles precisely as the naive
-    * form does. Chunk size is runtime-tunable (`graft.expand.chunk`) so
+    * form does. Chunk size is runtime-tunable ([[ExpandChunkConf]]) so
     * specs can exercise multi-chunk paths on toy groups; 2048 keeps the
     * biggest task at ~4M emitted pairs. Since round 12 the chunk grid is
     * SIZE-ADAPTIVE — see [[expandChunked]]: toy corpora take the plain
     * LATERAL VIEW path (no grid, no explicit-count exchange), scale/clone
     * corpora the chunked one, with output invariance across modes pinned
     * by CollapseFirstSpec. */
+  private[graft] val ExpandChunkConf = "spark.graft.expand.chunk"
   private[graft] def expandChunk(s: SparkSession): Int =
-    s.conf.getOption("graft.expand.chunk")
-      .orElse(sys.env.get("SPARK_GRAFT_EXPAND_CHUNK"))
-      .map(_.toInt).getOrElse(2048)
+    s.conf.getOption(ExpandChunkConf).map(_.toInt).getOrElse(2048)
   private[graft] def expandParts(s: SparkSession): Int =
     s.conf.get("spark.sql.shuffle.partitions").toInt
 
@@ -267,7 +266,7 @@ object Pipeline {
     * pure overhead at toy scale, where every group fits one chunk anyway
     * (~0.3 s per dedup query at sf0.1); at clone/scale corpora it is what
     * keeps the 2.5B-row expansions off a single core. Resolution:
-    *  1. an explicitly-set `graft.expand.chunk` size means `chunk`
+    *  1. an explicitly-set [[ExpandChunkConf]] size means `chunk`
     *     (a manual chunk size IS a request for the chunked path — this is
     *     what keeps CollapseFirstSpec's invariance test spanning BOTH
     *     modes: its base run takes the plain path, its chunk=2/1 runs the
@@ -297,8 +296,7 @@ object Pipeline {
   }
   private[graft] def expandChunked(s: SparkSession, dir: String, table: String): Boolean = {
     val (mode, why) =
-      if (s.conf.getOption("graft.expand.chunk")
-            .orElse(sys.env.get("SPARK_GRAFT_EXPAND_CHUNK")).isDefined)
+      if (s.conf.getOption(ExpandChunkConf).isDefined)
         (true, "explicit chunk size implies chunk mode")
       else {
         val bytes = corpusBytes(dir, table)
@@ -316,17 +314,15 @@ object Pipeline {
     * (~900 MB-1 GB at og300's m=1.5M); past Spark's 8 GB / 512M-row
     * broadcast hard limit (~m in the low tens of millions — BASELINE
     * §broadcast-slice ceiling has the measured curve) the forced hint
-    * would hard-fail instead of degrading. `graft.verify.broadcast=false`
-    * (or SPARK_GRAFT_VERIFY_BROADCAST=false) drops the hint so the
+    * would hard-fail instead of degrading. `spark.graft.verify.broadcast=false`
+    * drops the hint so the
     * planner falls back to the shuffled verify — answer-identical
     * (NgramPassSpec pins both modes equal), just paying the candidate
     * ×slice shuffle bytes the broadcast form avoids. Default true: at
     * every corpus this box can hold, broadcast is the right plan. */
-  private[graft] val BroadcastVerifyConf = "graft.verify.broadcast"
+  private[graft] val BroadcastVerifyConf = "spark.graft.verify.broadcast"
   private[graft] def broadcastVerify(s: SparkSession): Boolean =
-    s.conf.getOption(BroadcastVerifyConf)
-      .orElse(sys.env.get("SPARK_GRAFT_VERIFY_BROADCAST"))
-      .forall(_.toBoolean)
+    s.conf.getOption(BroadcastVerifyConf).forall(_.toBoolean)
 
   /** Bundled expansion parameters threaded into the builders. */
   private[graft] case class ExpandCfg(chunked: Boolean, parts: Int, chunk: Int)
@@ -825,8 +821,8 @@ object Pipeline {
     * Adaptive G: per label, G = max(min(m_label, 4), ceil(m_label / cell))
     * where m_label = that label's DISTINCT-content group count (a window
     * count over the groups aggregate — one cheap label-partition exchange)
-    * and `cell` is this budget (conf `graft.grid.cell` /
-    * SPARK_GRAFT_GRID_CELL, default 2048). Per-cell work is then
+    * and `cell` is this budget (conf [[GridCellConf]], default 2048).
+    * Per-cell work is then
     * (m_label/G)² <= cell² ≈ 4.2M pairs — the same per-task budget the
     * chunk expansion targets (2048² slices) — for ANY m, while per-row
     * replication (G+1 explode rows across the two sides) grows only as
@@ -839,10 +835,9 @@ object Pipeline {
     * ×N measurement is unchanged; above it the budget term takes over and
     * caps the cell. Output invariance across cell sizes is pinned by
     * CollapseFirstSpec (cell=1 forces G=m). */
+  private[graft] val GridCellConf = "spark.graft.grid.cell"
   private[graft] def gridCell(s: SparkSession): Double =
-    s.conf.getOption("graft.grid.cell")
-      .orElse(sys.env.get("SPARK_GRAFT_GRID_CELL"))
-      .map(_.toDouble).getOrElse(2048.0)
+    s.conf.getOption(GridCellConf).map(_.toDouble).getOrElse(2048.0)
 
   /** Parallelism floor for the adaptive grid (ADVICE r13): the min
     * sub-group count per label (capped at m_label) when the cell budget

@@ -144,10 +144,9 @@ object Extras {
       s: org.apache.spark.sql.SparkSession, n: Int)(
       body: org.apache.spark.sql.SparkSession => A): A = {
     // newSession(): same SparkContext + shared state, fresh session state
-    // and conf (cloneSession is private[sql] in Spark 4). The streaming
-    // bodies build everything from files and built-in functions, so the
-    // fresh catalog is sufficient.
-    val c = s.newSession()
+    // and conf (cloneSession is private[sql] in Spark 4), wired like every
+    // other graft session
+    val c = Engine.wireSession(s.newSession())
     c.conf.set("spark.sql.shuffle.partitions", n.toString)
     body(c)
   }

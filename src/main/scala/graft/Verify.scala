@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -44,17 +43,7 @@ object Verify {
       case Some(s) => s.split(",").map(_.trim).filter(_.nonEmpty).toSet
       case None => Set.empty
     }
-    val cpus = Engine.cpus.toString
-    // Scale knobs shared with Engine.session (Engine.envKnobs); with none
-    // set, sf0.1 runs keep the plain on-heap session with one shuffle
-    // partition per core.
-    val spark = Engine.envKnobs(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", Engine.warehouseDir), defaultPartitions = cpus)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Engine.session()
     val metricsOn = sys.env.get("SPARK_GRAFT_METRICS").contains("1")
     if (metricsOn) spark.sparkContext.addSparkListener(new MetricsListener)
     // auto q96-skip on clone corpora. Detection (ADVICE r10: the bare

@@ -23,11 +23,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * views never leak into specs sharing the session. */
 class CollapseFirstSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = {
-    val s = Engine.session("local[4]").newSession()
-    functions.registerAll(s)
-    s
-  }
+  lazy val spark: SparkSession = Engine.wireSession(Engine.session("local[4]").newSession())
 
   // (doc_id, text): three texts with heavy 4-gram overlap chains, one
   // isolated singleton, one isolated clone group, one non-'dup' text
@@ -140,8 +136,8 @@ class CollapseFirstSpec extends AnyFunSuite {
 
     def runAll(chunk: Option[Int]): Map[String, List[Seq[Any]]] = {
       chunk match {
-        case Some(c) => spark.conf.set("graft.expand.chunk", c.toString)
-        case None    => spark.conf.unset("graft.expand.chunk")
+        case Some(c) => spark.conf.set(Pipeline.ExpandChunkConf, c.toString)
+        case None    => spark.conf.unset(Pipeline.ExpandChunkConf)
       }
       Seq("q44_dedup_minhash_lsh", "q45_dedup_simhash",
           "q46_dedup_ngram_jaccard", "q47_dedup_embedding_cosine").map { n =>
@@ -166,11 +162,11 @@ class CollapseFirstSpec extends AnyFunSuite {
       }
       // and the split must actually BUY parallelism: an explicit-count
       // exchange sits between the chunk grid and the element explode
-      spark.conf.set("graft.expand.chunk", "2")
+      spark.conf.set(Pipeline.ExpandChunkConf, "2")
       val plan = SparkEntry.queries("q44_dedup_minhash_lsh")(spark, "unused")
         .queryExecution.executedPlan.toString
       assert(plan.contains("REPARTITION_BY_NUM"), plan.take(2000))
-    } finally spark.conf.unset("graft.expand.chunk")
+    } finally spark.conf.unset(Pipeline.ExpandChunkConf)
   }
 
   test("q47 adaptive grid is cell-size-invariant (round 13 straggler fix)") {
@@ -191,8 +187,8 @@ class CollapseFirstSpec extends AnyFunSuite {
       .toDF("vec_id", "label", "embedding").createOrReplaceTempView("embeddings")
     def run(cell: Option[String]): List[Seq[Any]] = {
       cell match {
-        case Some(c) => spark.conf.set("graft.grid.cell", c)
-        case None    => spark.conf.unset("graft.grid.cell")
+        case Some(c) => spark.conf.set(Pipeline.GridCellConf, c)
+        case None    => spark.conf.unset(Pipeline.GridCellConf)
       }
       SparkEntry.queries("q47_dedup_embedding_cosine")(spark, "unused")
         .collect().map(_.toSeq).toList
@@ -204,8 +200,8 @@ class CollapseFirstSpec extends AnyFunSuite {
       // empty grid can never pass
       assert(base.size == 39, s"got ${base.size}")
       for (c <- Seq("2", "1"))
-        assert(run(Some(c)) == base, s"diverged at graft.grid.cell=$c")
-    } finally spark.conf.unset("graft.grid.cell")
+        assert(run(Some(c)) == base, s"diverged at ${Pipeline.GridCellConf}=$c")
+    } finally spark.conf.unset(Pipeline.GridCellConf)
   }
 
   test("q47 on a zero vector: ANSI divide-by-zero, same as the naive join") {

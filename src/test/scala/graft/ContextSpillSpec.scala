@@ -37,7 +37,7 @@ class ContextSpillSpec extends AnyFunSuite {
   }
 
   private lazy val spark: SparkSession = {
-    val s = Engine.session("local[4]").newSession()
+    val s = Engine.wireSession(Engine.session("local[4]").newSession())
     Engine.registerTables(s, Sf)
     s
   }

@@ -19,7 +19,7 @@ class DppSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private val DppConf = "spark.sql.optimizer.dynamicPartitionPruning.enabled"
 
   private lazy val dir: String = {
-    val s = spark.newSession()
+    val s = Engine.wireSession(spark.newSession())
     Engine.registerTables(s, "/root/testdata/sf0.01")
     val d = s"${Engine.tmpDir}/dpp_spec"
     s.sql(s"""SELECT l_orderkey, l_linenumber, l_quantity,
@@ -32,7 +32,7 @@ class DppSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   /** (rows, fact scan) of the join in a session with DPP on or off. */
   private def run(dpp: Boolean): (Seq[Row], FileSourceScanExec) = {
-    val s = spark.newSession()
+    val s = Engine.wireSession(spark.newSession())
     s.conf.set(DppConf, dpp.toString)
     s.read.parquet(s"$dir/fact").createOrReplaceTempView("fact")
     s.read.parquet(s"$dir/dim").createOrReplaceTempView("dim")

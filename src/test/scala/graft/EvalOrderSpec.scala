@@ -31,11 +31,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class EvalOrderSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = {
-    val s = Engine.session("local[4]").newSession()
-    functions.registerAll(s)
-    s
-  }
+  lazy val spark: SparkSession = Engine.wireSession(Engine.session("local[4]").newSession())
 
   // Crafted corpus: a clone group holding BOTH a bench (id%97=0) and a
   // train member, a train doc sharing one 4-gram with each bench text,

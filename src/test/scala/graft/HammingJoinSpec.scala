@@ -41,9 +41,8 @@ class HammingJoinSpec extends AnyFunSuite {
     mkTable()
     val got = spark.sql(naive).collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     // ground truth with the rule genuinely off: the conf kill switch is the
-    // only reliable disable — the rule is builder-injected, so clearing
-    // extraOptimizations would leave it active and compare the banded plan
-    // against itself
+    // one disable that also reaches a builder-injected copy (GraftExtensions
+    // sessions), which clearing extraOptimizations would leave active
     spark.conf.set(HammingJoinRewrite.EnabledConf, "false")
     val exp =
       try {
@@ -114,6 +113,20 @@ class HammingJoinSpec extends AnyFunSuite {
       }
       assert(fresh.sql("SELECT simhash60('near dup text')").head.getLong(0) ===
         Fingerprints.simhash60(UTF8String.fromString("near dup text")))
+      // prepare appends a second HammingJoinRewrite to the builder-injected
+      // one; the second finds the join already equi-keyed and leaves it
+      val sf = "/root/testdata/sf0.01"
+      Engine.prepare(fresh, sf)
+      val q45 = "q45_dedup_simhash"
+      // the shared session's answer first: an entry's reclaim drops the
+      // previous entry's views, and the plan below reads fresh's q45_g
+      val want = SparkEntry.queries(q45)(spark, sf).collect().toSeq
+      assert(SparkEntry.queries(q45)(fresh, sf).collect().toSeq === want)
+      val banded = fresh.sql(Pipeline.simhashContentPairSql).queryExecution.optimizedPlan.collect {
+        case g: org.apache.spark.sql.catalyst.plans.logical.Generate
+            if g.generatorOutput.exists(_.name == "__l_bv") => g
+      }
+      assert(banded.size === 1, s"expected one banded join, got ${banded.size}")
     } finally {
       SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()
       savedDefault.foreach(SparkSession.setDefaultSession)

@@ -15,7 +15,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *     single-shot shuffle for K og300-sized passes with zero cross-pass
   *     dedup debt.
   *
-  *  2. `graft.verify.broadcast` off (the shuffled verify) must produce
+  *  2. `spark.graft.verify.broadcast` off (the shuffled verify) must produce
   *     the same content pairs — the conf changes the PLAN past the
   *     broadcast ceiling, never the answer.
   */
@@ -23,7 +23,6 @@ class MinhashPassSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = {
     val s = Engine.session("local[4]").newSession()
-    functions.registerAll(s)
     Engine.prepare(s, "/root/testdata/sf0.01")
     s.sql(Pipeline.minhashGroupsSql).createOrReplaceTempView("q44_g")
     s.sql(Pipeline.minhashSigSql).createOrReplaceTempView("q44_sig")

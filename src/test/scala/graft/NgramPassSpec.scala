@@ -19,7 +19,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *     what lets NgramPassRun trade one 360-405 GB og300 shuffle for K
   *     og100-sized ones with zero cross-pass dedup debt.
   *
-  *  3. The `graft.verify.broadcast` kill switch (ADVICE r14 #4): with the
+  *  3. The `spark.graft.verify.broadcast` kill switch (ADVICE r14 #4): with the
   *     hint dropped the planner's shuffled verify must produce the same
   *     rows for q46's content pairs and for the full q44 query — the
   *     conf changes the PLAN past the broadcast ceiling, never the
@@ -29,7 +29,6 @@ class NgramPassSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = {
     val s = Engine.session("local[4]").newSession()
-    functions.registerAll(s)
     Engine.prepare(s, "/root/testdata/sf0.01")
     s.sql(Pipeline.ngramGroupsSpark).createOrReplaceTempView("npass_g")
     s.sql(Pipeline.ngramPxSql("npass_g")).createOrReplaceTempView("npass_px")

@@ -16,10 +16,13 @@ import org.scalatest.funsuite.AnyFunSuite
   *    row twice, the receipt that the passes are disjoint;
   *  - ngram runs pass ×3 and finish; its dumps equal q46's and q66's
   *    answers;
-  *  - a step that reads a missing pass refuses to run. */
+  *  - a step that reads a missing pass refuses to run;
+  *  - q45's and q46's entries equal doc-level naive all-pairs references
+  *    on the same corpus, so a fault in the clique tail the entries and
+  *    the runner share cannot pass by agreeing with itself. */
 class PassRunSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = Engine.session("local[4]").newSession()
+  lazy val spark: SparkSession = Engine.wireSession(Engine.session("local[4]").newSession())
   private val K = 3
   private lazy val dir = s"${Engine.tmpDir}/pass_run_spec"
   private lazy val sf: String = {
@@ -64,6 +67,42 @@ class PassRunSpec extends AnyFunSuite {
     run("ngram", "finish", K, cand, out)
     assert(dumped(s"$out/q46_dedup_ngram_jaccard.parquet") == q46)
     assert(dumped(s"$out/q66_dedup_components.parquet") == q66)
+  }
+
+  /** `entry`'s answer against `naive`, run on the entry's prepared session
+    * under `naiveConf`; each marked document's clone pair (d, d + 1000)
+    * must be in the answer, and only the clique branch emits those. */
+  private def naiveCheck(entry: String, naive: String, naiveConf: (String, String)*): Unit = {
+    val got = answer(entry)
+    naiveConf.foreach { case (k, v) => spark.conf.set(k, v) }
+    val want = try multiset(spark.sql(naive).collect())
+               finally naiveConf.foreach { case (k, _) => spark.conf.unset(k) }
+    assert(got == want, s"$entry differs from its naive reference")
+    val marked = spark.sql("SELECT * FROM documents WHERE text LIKE '%dup%'").count() / 2
+    assert(marked > 0 && got.keys.count(r => r.getLong(1) == r.getLong(0) + 1000) == marked,
+      "a marked document's clone pair is missing")
+  }
+
+  test("clique branch: q45 equals the doc-level all-pairs simhash60 join") {
+    naiveCheck("q45_dedup_simhash",
+      """WITH s AS (SELECT doc_id, simhash60(text) AS sh FROM documents WHERE text LIKE '%dup%')
+        |SELECT a.doc_id AS da, b.doc_id AS db, cast(bit_count(a.sh ^ b.sh) AS BIGINT) AS hamming
+        |FROM s a JOIN s b ON bit_count(a.sh ^ b.sh) <= 8 AND a.doc_id < b.doc_id""".stripMargin,
+      HammingJoinRewrite.EnabledConf -> "false")
+  }
+
+  test("clique branch: q46 equals the doc-level all-pairs 4-gram Jaccard") {
+    naiveCheck("q46_dedup_ngram_jaccard",
+      s"""WITH g AS (
+         |  SELECT doc_id, array_distinct(transform(sequence(1, length(text) - 3),
+         |    i -> ${Pipeline.h32Spark("substr(text, i, 4)")})) AS grams
+         |  FROM documents WHERE text LIKE '%dup%' AND length(text) >= 4)
+         |SELECT da, db, jacc FROM (
+         |  SELECT a.doc_id AS da, b.doc_id AS db,
+         |    round(size(array_intersect(a.grams, b.grams)) / cast(size(a.grams) + size(b.grams)
+         |      - size(array_intersect(a.grams, b.grams)) AS DOUBLE), 6) AS jacc
+         |  FROM g a JOIN g b ON a.doc_id < b.doc_id) t
+         |WHERE jacc >= ${Pipeline.JaccThreshold}""".stripMargin)
   }
 
   test("expand refuses a missing pass; a family runs only its own steps") {

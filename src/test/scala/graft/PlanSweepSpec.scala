@@ -11,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class PlanSweepSpec extends AnyFunSuite {
 
   test("every contract entry passes the plan sweep and the exchange ratchet at sf0.01") {
-    val spark = Engine.session("local[4]").newSession()
+    val spark = Engine.wireSession(Engine.session("local[4]").newSession())
     val bad = PlanSweep.sweep(spark, PlanSweep.defaultSf)
     assert(bad.isEmpty, bad.mkString("\n", "\n", ""))
   }

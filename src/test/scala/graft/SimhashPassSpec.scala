@@ -16,7 +16,6 @@ class SimhashPassSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = {
     val s = Engine.session("local[4]").newSession()
-    functions.registerAll(s)
     Engine.prepare(s, "/root/testdata/sf0.01")
     s.sql(Pipeline.simhashGroupsSql).createOrReplaceTempView("q45_g")
     s

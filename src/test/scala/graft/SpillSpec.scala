@@ -30,7 +30,7 @@ class SpillSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private val sf = "/root/testdata/sf0.01"
 
   private def session(buffer: String, constrained: Boolean): SparkSession = {
-    val s = spark.newSession()
+    val s = Engine.wireSession(spark.newSession())
     s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     if (constrained) {
       s.conf.set(s"spark.sql.$buffer.buffer.in.memory.threshold", "1024")
