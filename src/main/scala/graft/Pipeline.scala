@@ -596,7 +596,7 @@ object Pipeline {
     // q46's groups view — fine for one JVM / a 1000-node cluster's
     // executors, and the piece to watch at 100× more distinct contents).
     // Broadcast conf-gated like q46's verify (ADVICE r14 #4): past the
-    // broadcast ceiling graft.verify.broadcast=false degrades this to the
+    // broadcast ceiling spark.graft.verify.broadcast=false degrades this to the
     // shuffled verify instead of hard-failing on Spark's 8 GB limit.
     def contentPairsSpark(broadcast: Boolean) =
       s"""${minhashCandSql("")}

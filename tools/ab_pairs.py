@@ -13,14 +13,16 @@ Each checkout makes one untimed priming run per workload (it builds the
 engine and harness, writes the og10 corpus and the GREATEST tables, and
 warms the page cache). Then `python3 perfbench/run.py` runs in N pairs per
 workload, seeds seed0 .. seed0+N-1, the side that goes first alternating
-from pair to pair. Every run's metrics go to `<scratch>/runs.jsonl`,
-which each invocation starts afresh; `--summarize` reprints the table
-from it.
+from pair to pair, each run as long as BENCHMARK.json's `run_seconds`.
+Every run's metrics go to `<scratch>/runs.jsonl`, which each invocation
+starts afresh.
 
 Per end-to-end metric of BENCHMARK.json the table gives both medians and
 quartiles, the change's wins out of N pairs, the parent's IQR, whether the
 median gap exceeds it, and whether the change stays within the metric's
-bound. It reads perfbench/stats.py and BENCHMARK.json and changes neither.
+bound. Quartiles are `statistics.quantiles(xs, n=4)` with its default
+(exclusive) method, the spread the benchmark's own gain rule uses. It
+reads perfbench/stats.py and BENCHMARK.json and changes neither.
 """
 import argparse
 import json
@@ -37,10 +39,10 @@ SIDES = ("a", "b")
 
 
 def quartiles(xs):
-    """(q1, median, q3) of `xs`, inclusive method; a single sample is all three."""
+    """(q1, median, q3) of `xs`, exclusive method; a single sample is all three."""
     if len(xs) == 1:
         return xs[0], xs[0], xs[0]
-    q1, _, q3 = statistics.quantiles(xs, n=4, method="inclusive")
+    q1, _, q3 = statistics.quantiles(xs, n=4)
     return q1, stats.median(xs), q3
 
 
@@ -161,22 +163,15 @@ def main():
     ap.add_argument("--aa", action="store_true", help="run one commit against itself")
     ap.add_argument("--workload", default="contract,volume")
     ap.add_argument("--pairs", type=int, default=5)
-    ap.add_argument("--seconds", type=float, default=8)
     ap.add_argument("--seed0", type=int, default=1)
     ap.add_argument("--scratch", required=True,
                     help="parent directory of the two checkouts and runs.jsonl")
-    ap.add_argument("--summarize", action="store_true",
-                    help="print the table from <scratch>/runs.jsonl and exit")
     a = ap.parse_args()
 
     with open(os.path.join(ROOT, "BENCHMARK.json")) as fh:
-        metrics = json.load(fh)["end_to_end"]
+        bench = json.load(fh)
+    metrics, seconds = bench["end_to_end"], bench["run_seconds"]
     log = os.path.join(a.scratch, "runs.jsonl")
-    if a.summarize:
-        runs = [json.loads(line) for line in open(log)]
-        labels = {s: next((r["rev"] for r in runs if r["side"] == s), "?") for s in SIDES}
-        print(table(summarize(runs, metrics), failures(runs), labels))
-        return
     if len(a.revs) != (1 if a.aa else 2):
         ap.error("give BASE CHANGE, or --aa COMMIT")
     revs = a.revs * 2 if a.aa else a.revs
@@ -189,11 +184,11 @@ def main():
     for w in workloads:
         for s in SIDES:  # priming: build, inputs, page cache; not recorded
             print(f"[ab_pairs] priming {s} ({labels[s]}) {w}", file=sys.stderr)
-            run_once(dirs[s], w, 0, a.seconds)
+            run_once(dirs[s], w, 0, seconds)
         for i in range(a.pairs):
             order = SIDES if i % 2 == 0 else SIDES[::-1]
             for s in order:
-                ok, m = run_once(dirs[s], w, a.seed0 + i, a.seconds)
+                ok, m = run_once(dirs[s], w, a.seed0 + i, seconds)
                 r = {"workload": w, "pair": i, "seed": a.seed0 + i, "side": s,
                      "rev": labels[s], "ok": ok, "metrics": m}
                 runs.append(r)

@@ -28,7 +28,9 @@ class SummarizeTest(unittest.TestCase):
         self.assertEqual(r["wins"], 4)
         self.assertAlmostEqual(r["a"][1], 2.2)
         self.assertAlmostEqual(r["b"][1], 2.1)
-        self.assertAlmostEqual(r["iqr_a"], 2.3 - 2.1)
+        self.assertAlmostEqual(r["a"][0], 2.05)      # exclusive quartiles, as the
+        self.assertAlmostEqual(r["a"][2], 2.35)      # benchmark's gain rule reads them
+        self.assertAlmostEqual(r["iqr_a"], 2.35 - 2.05)
         self.assertFalse(r["gap_gt_iqr"])
         self.assertTrue(r["within_bound"])
         self.assertLess(r["worse_rel"], 0)
