@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr, unix_micros}
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import scala.jdk.CollectionConverters._
 
 /** Facade over SparkSession — the engine's single entry point.
   *
@@ -315,24 +316,27 @@ object Engine {
     * always safe. This is the same hygiene a long-lived 100 TB session
     * needs: caches are owned by the query that made them and released when
     * its result is consumed. */
-  /** RDD ids persisted by [[ckpt]] — the ONLY ids [[reclaim]] may sweep.
-    * Sweeping `getPersistentRDDs` wholesale would clobber third-party
-    * caches and, worse, a previous entry's still-lazy locally-checkpointed
-    * result whose lineage is already truncated (ADVICE r5). */
+  /** RDD ids persisted by [[ckpt]], with the session that made each — the
+    * ONLY ids [[reclaim]] may sweep, and only for that session. Sweeping
+    * `getPersistentRDDs` wholesale would clobber third-party caches and,
+    * worse, a previous entry's still-lazy locally-checkpointed result
+    * whose lineage is already truncated (ADVICE r5); sweeping another
+    * session's ids would free blocks an entry there still reads. */
   private val ownedRddIds =
-    java.util.Collections.synchronizedSet(new java.util.HashSet[Int]())
+    java.util.Collections.synchronizedList(new java.util.ArrayList[(SparkSession, Int)]())
 
   /** Materialize `df` via `localCheckpoint()` and record the persisted
-    * block's RDD id as graft-owned. Every checkpoint in query code goes
-    * through here so reclaim can free exactly our blocks and nothing else.
-    * The before/after diff of the persistent-RDD registry is safe under
-    * the sequential contract harness (one query materializes at a time). */
+    * block's RDD id as owned by `df`'s session. Every checkpoint in query
+    * code goes through here so reclaim can free exactly our blocks and
+    * nothing else. The before/after diff of the persistent-RDD registry is
+    * safe under the sequential contract harness (one query materializes at
+    * a time). */
   def ckpt(df: DataFrame, reliable: Boolean = false): DataFrame = {
     val sc = df.sparkSession.sparkContext
     val before = sc.getPersistentRDDs.keySet
     val out = if (reliable) df.checkpoint() else df.localCheckpoint()
     (sc.getPersistentRDDs.keySet -- before).foreach { id =>
-      ownedRddIds.add(id); ()
+      ownedRddIds.add((df.sparkSession, id)); ()
     }
     out
   }
@@ -363,23 +367,24 @@ object Engine {
     // cleanup to the next query's wall clock (measured: up to seconds
     // after checkpoint-heavy entries)
     val persistent = spark.sparkContext.getPersistentRDDs
-    val ids = ownedRddIds.synchronized {
-      val snap = new java.util.ArrayList[Int](ownedRddIds)
-      ownedRddIds.clear()
-      snap
-    }
-    ids.forEach(id => persistent.get(id).foreach(_.unpersist(blocking = false)))
-    val views = ownedViews.synchronized {
-      val snap = new java.util.ArrayList[(SparkSession, String)](ownedViews)
-      ownedViews.clear()
-      snap
-    }
-    views.forEach { case (s, v) => s.catalog.dropTempView(v); () }
+    takeOwned(ownedRddIds, spark)
+      .foreach(id => persistent.get(id).foreach(_.unpersist(blocking = false)))
+    takeOwned(ownedViews, spark).foreach(spark.catalog.dropTempView)
     // run-to-completion streaming results (q88/q95 memory sinks) live in
     // the per-stream CLONED session (Surface.withStatePartitions) and are
     // released when the entry's result DataFrame is dropped — nothing to
     // sweep here; dropping views on `spark` would be a no-op. The drops
     // r5 did here are retired with the clone-scoped streams.
+  }
+
+  /** Remove and return what `spark` owns in `owned`; other sessions'
+    * entries stay. */
+  private def takeOwned[A](owned: java.util.List[(SparkSession, A)],
+      spark: SparkSession): Seq[A] = owned.synchronized {
+    val (mine, rest) = owned.asScala.toSeq.partition(_._1 eq spark)
+    owned.clear()
+    owned.addAll(rest.asJava)
+    mine.map(_._2)
   }
 
   def sql(spark: SparkSession, query: String): DataFrame = spark.sql(query)

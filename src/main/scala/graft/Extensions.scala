@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions._
+import org.apache.spark.sql.catalyst.optimizer.CollapseProject
 import org.apache.spark.sql.catalyst.plans.{Inner, LeftSemi}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, Generate, HintInfo, Join, JoinHint, LogicalPlan, Project, BROADCAST}
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -29,13 +30,13 @@ import org.apache.spark.sql.types.{IntegerType, LongType}
   *    a k+1-entry band array on each side,
   *  - equi-join on (band index, band value) — a shuffled hash join whose
   *    work is ∝ band collisions,
-  *  - keep each qualifying pair exactly once by filtering to the FIRST
+  *  - keep each qualifying pair exactly once by restricting to the FIRST
   *    shared band (`pos = CASE WHEN (a^b) & mask0 = 0 THEN 0 WHEN ... END`
   *    — band q is shared iff the XOR vanishes on the positions q owns),
   *    so multiplicity is identical to the nested-loop join with no
   *    key-uniqueness assumption about the inputs,
   *  - re-apply the ORIGINAL condition (the exact bit_count bound and any
-  *    other conjuncts) as a post-join filter,
+  *    other conjuncts) as the banded join's residual condition,
   *  - project back to the original join output.
   *
   * Fires only on INNER joins whose condition has a
@@ -111,7 +112,7 @@ object HammingJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
 
   override def apply(plan: LogicalPlan): LogicalPlan =
     if (conf.getConfString(EnabledConf, "true") != "true") plan
-    else plan.transformUp {
+    else collapseIfBanded(plan, plan.transformUp {
       case j @ Join(left, right, Inner, Some(cond), _) =>
         val conjuncts = splitConjunctivePredicates(cond)
         val hit = conjuncts.flatMap(matchConjunct(_, left, right)).headOption
@@ -137,8 +138,6 @@ object HammingJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
 
           val (lg, lpos, lbv) = explodeBands(left, a, "l")
           val (rg, rpos, rbv) = explodeBands(right, b, "r")
-          val banded = Join(lg, rg, Inner,
-            Some(And(EqualTo(lpos, rpos), EqualTo(lbv, rbv))), j.hint)
           // first-shared-band index: band q is shared ⟺ a and b agree on
           // every position q owns ⟺ ((a ^ b) & mask_q) = 0 — so the CASE
           // probes one XOR against 9 constant masks (~30 ops/row) instead
@@ -155,10 +154,22 @@ object HammingJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
             (EqualTo(BitwiseAnd(xorAB, Literal(ps.map(1L << _).reduce(_ | _))),
               Literal(0L)), Literal(i)): (Expression, Expression)
           })
-          Project(j.output,
-            Filter(And(cond, EqualTo(lpos, firstShared)), banded))
+          // the residual is the banded join's own condition, not a Filter
+          // above it: `extraOptimizations`, where wireSession installs this
+          // rule, runs after the batches that fold a Filter into a join,
+          // so only this form is evaluated inside the hash join there
+          Project(j.output, Join(lg, rg, Inner,
+            Some((Seq(EqualTo(lpos, rpos), EqualTo(lbv, rbv)) ++ conjuncts :+
+              EqualTo(lpos, firstShared)).reduceLeft(And)), j.hint))
         }
-    }
+    })
+
+  /** Merge the rewrite's Project into the one above it, as the operator
+    * batch's CollapseProject does: no batch that collapses projects runs
+    * after `extraOptimizations`, where wireSession installs this rule. A
+    * plan the rule left alone is returned as it came. */
+  private def collapseIfBanded(in: LogicalPlan, out: LogicalPlan): LogicalPlan =
+    if (out eq in) in else CollapseProject(out)
 }
 
 /** Optimizer rule: make the scale-safe plan the DEFAULT for the EXISTS /

@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 
 /** Differential-fuzz runner: executes a generated query file
   * (tools/fuzz_gen.py, {name: sql} in the shared Spark/DuckDB ANSI
@@ -25,36 +25,22 @@ object FuzzVerify {
     val spark = Engine.session()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     Engine.prepare(spark, sfDir)
-    new java.io.File(outDir).mkdirs()
-
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val root = mapper.readTree(new java.io.File(queriesJson))
-    var failed = 0
     // Entries are either a plain SQL string (same text runs on both
     // engines) or {"spark": sql, "oracle": sql} pairs — the collapse-first
     // fuzzer's form (tools/fuzz_dedup.py), where the Spark side is the
     // restatement under test and the oracle side is DuckDB's naive
     // all-pairs statement of the same answer.
-    val oracleOut = mapper.createObjectNode()
-    root.fields().forEachRemaining { e =>
-      val name = e.getKey
-      val (sparkSql, oracleSql) =
-        if (e.getValue.isObject)
-          (e.getValue.get("spark").asText(), e.getValue.get("oracle").asText())
-        else { val s = e.getValue.asText(); (s, s) }
-      oracleOut.put(name, oracleSql)
-      try {
-        spark.sql(sparkSql).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-        System.err.println(s"[fuzz] $name ok")
-      } catch { case scala.util.control.NonFatal(ex) =>
-        failed += 1
-        System.err.println(s"[fuzz] $name FAILED: ${ex.getMessage.take(200)}")
+    val queries = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(new java.io.File(queriesJson)).properties().asScala.toSeq.map { e =>
+        val v = e.getValue
+        if (v.isObject) (e.getKey, v.get("spark").asText(), v.get("oracle").asText())
+        else (e.getKey, v.asText(), v.asText())
       }
-    }
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
-      mapper.writerWithDefaultPrettyPrinter().writeValueAsString(oracleOut))
-    spark.stop()
-    if (failed > 0) sys.exit(1)
+    val failed =
+      try Verify.dump(spark, outDir,
+        queries.map { case (name, sparkSql, _) => name -> (() => spark.sql(sparkSql)) },
+        queries.map { case (name, _, oracleSql) => name -> oracleSql }.toMap)
+      finally spark.stop()
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

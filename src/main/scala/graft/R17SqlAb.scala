@@ -7,7 +7,7 @@ import org.apache.spark.sql.Row
   * box's ambient drift cancels out of the comparison (this box swings up
   * to ~10× on multi-minute windows — round-17 measurement protocol).
   * Also verifies the two statements return IDENTICAL typed row multisets
-  * (column types, then row count, then rows) unless SKIP_EQ=1, so a
+  * (column types, then row count, then rows) before timing, so a
   * formulation A/B can't silently change the answer.
   *
   * Usage: tools/run_main.sh graft.R17SqlAb "<sqlA>" "<sqlB>"
@@ -37,20 +37,18 @@ object R17SqlAb {
     val reps = sys.env.getOrElse("REPS", "3").toInt
     val spark = Engine.session()
     Engine.prepare(spark, sf)
-    if (!sys.env.get("SKIP_EQ").contains("1")) {
-      val (da, db) = (spark.sql(a), spark.sql(b))
-      val (ta, tb) = (da.schema.map(_.dataType), db.schema.map(_.dataType))
-      require(ta == tb, s"A/B column types differ: $ta vs $tb")
-      val (ra, rb) = (da.collect(), db.collect())
-      require(ra.length == rb.length, s"A/B row counts differ: ${ra.length} vs ${rb.length}")
-      val (ba, bb) = (bag(ra), bag(rb))
-      def n(m: Map[Any, Array[Row]], k: Any) = m.get(k).fold(0)(_.length)
-      (ba.keySet ++ bb.keySet).find(k => n(ba, k) != n(bb, k)).foreach { k =>
-        throw new IllegalArgumentException(s"A/B results differ; first differing row " +
-          s"(A x${n(ba, k)}, B x${n(bb, k)}): ${ba.getOrElse(k, bb(k)).head}")
-      }
-      println(s"ABEQ identical (${ra.length} rows)")
+    val (da, db) = (spark.sql(a), spark.sql(b))
+    val (ta, tb) = (da.schema.map(_.dataType), db.schema.map(_.dataType))
+    require(ta == tb, s"A/B column types differ: $ta vs $tb")
+    val (ra, rb) = (da.collect(), db.collect())
+    require(ra.length == rb.length, s"A/B row counts differ: ${ra.length} vs ${rb.length}")
+    val (ba, bb) = (bag(ra), bag(rb))
+    def n(m: Map[Any, Array[Row]], k: Any) = m.get(k).fold(0)(_.length)
+    (ba.keySet ++ bb.keySet).find(k => n(ba, k) != n(bb, k)).foreach { k =>
+      throw new IllegalArgumentException(s"A/B results differ; first differing row " +
+        s"(A x${n(ba, k)}, B x${n(bb, k)}): ${ba.getOrElse(k, bb(k)).head}")
     }
+    println(s"ABEQ identical (${ra.length} rows)")
     (1 to reps).foreach { r =>
       Seq("A" -> a, "B" -> b).foreach { case (name, sql) =>
         val t0 = System.nanoTime()

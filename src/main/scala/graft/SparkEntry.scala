@@ -71,6 +71,16 @@ object SparkEntry {
       }
     }.toMap
 
+  /** The entries the harness mains run, in name order: every entry when
+    * `names` is empty, else exactly the named ones. An unknown name fails
+    * here, before any entry runs. */
+  def select(names: Seq[String]): Seq[(String, (SparkSession, String) => DataFrame)] = {
+    val all = queries
+    val unknown = names.filterNot(all.contains)
+    require(unknown.isEmpty, s"unknown contract entries: ${unknown.mkString(", ")}")
+    (if (names.isEmpty) all.keys else names.distinct).toSeq.sorted.map(n => n -> all(n))
+  }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops →
     * driver records a weaker rows-only check. */

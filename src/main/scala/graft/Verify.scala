@@ -1,15 +1,19 @@
 package graft
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+/** Correctness dump: each SparkEntry.queries result → parquet, plus
+  * oracle_sql.json, for the DuckDB oracle compare (`tools/hash_check.py`).
+  *
+  * Usage: `graft.Verify <sfDir> <outDir> [entry...]`; no entry names dumps
+  * every entry, an unknown name fails before any entry runs. */
 object Verify {
   /** Opt-in run metrics (round 16, VERDICT r15 #2): SPARK_GRAFT_METRICS=1
     * accumulates TaskMetrics shuffle write/read + disk spill across the
     * run and prints exact totals after the SparkContext stops (the bus is
-    * flushed by stop, so totals are exact; the per-query lines printed
-    * mid-run are best-effort snapshots of an async bus). The broadcast
-    * vs shuffled verify A/B cites the post-stop totals of single-query
-    * runs — byte numbers a loaded box cannot distort, unlike wall time. */
+    * flushed by stop, so totals are exact). The broadcast vs shuffled
+    * verify A/B cites the post-stop totals of single-query runs — byte
+    * numbers a loaded box cannot distort, unlike wall time. */
   private val shufW = new java.util.concurrent.atomic.AtomicLong(0)
   private val shufR = new java.util.concurrent.atomic.AtomicLong(0)
   private val spill = new java.util.concurrent.atomic.AtomicLong(0)
@@ -25,9 +29,60 @@ object Verify {
       }
     }
   }
+
+  /** Thrown by [[dump]] when the output device is below the free-space
+    * floor: the whole dump stops, so a partial dump can't read as complete. */
+  final class DiskFloor(msg: String) extends RuntimeException(msg)
+
+  /** `{name: text}` as one JSON object, keys sorted. Jackson escapes every
+    * control character, so SQL with a tab or CR still loads under Python's
+    * json.load. */
+  private def writeJson(path: String, m: Map[String, String]): Unit =
+    Files.writeString(Paths.get(path), new com.fasterxml.jackson.databind.ObjectMapper()
+      .writeValueAsString(new java.util.TreeMap[String, String](m.asJava)))
+
+  /** Write each run's result as single-file parquet under `outDir/<name>`,
+    * then `oracleSql` as `outDir/oracle_sql.json` — the layout
+    * `tools/hash_check.py` compares against DuckDB. A run that throws a
+    * non-fatal error is logged and skipped; a fatal JVM error (OOM etc.)
+    * aborts the dump instead of surfacing as one misleading per-entry
+    * failure. Returns the names of the runs that failed.
+    *
+    * Disk-budget guard (VERDICT r9 #7): round 9 lost its headline x100
+    * artifact to mid-dump ENOSPC that surfaced only as task deaths, so
+    * each run first checks free space on the output device and throws
+    * [[DiskFloor]], with the remedy named, below the floor. Floor default
+    * 4 GiB ≈ 2× the largest observed per-query dump at x100 (q44, ~1.9 GB
+    * before the q96 exclusion existed); override with
+    * SPARK_GRAFT_MIN_FREE_GB. */
+  def dump(spark: SparkSession, outDir: String, runs: Seq[(String, () => DataFrame)],
+      oracleSql: Map[String, String]): Seq[String] = {
+    new java.io.File(outDir).mkdirs()
+    val minFreeBytes =
+      sys.env.getOrElse("SPARK_GRAFT_MIN_FREE_GB", "4").toDouble * (1L << 30)
+    val failed = runs.flatMap { case (name, run) =>
+      val free = new java.io.File(outDir).getUsableSpace
+      if (free < minFreeBytes)
+        throw new DiskFloor(
+          f"[verify] ABORT before $name: ${free / 1e9}%.1f GB free on the " +
+          f"output device < ${minFreeBytes / 1e9}%.1f GB floor. Remedy: free " +
+          "space (e.g. delete a regenerable scale corpus — " +
+          "tools/scale_up.py rebuilds one in minutes — or a stale dump dir), " +
+          "or lower SPARK_GRAFT_MIN_FREE_GB if the projection is known-small. " +
+          "Aborting the whole run so a partial dump can't read as complete.")
+      val t = Bench.timed(e => System.err.println(s"[verify] $name failed: ${e.getMessage}")) {
+        run().coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+      }
+      if (t < 0) Some(name)
+      else { System.err.println(f"[verify] $name ok in $t%.1fs"); None }
+    }
+    writeJson(s"$outDir/oracle_sql.json", oracleSql)
+    failed
+  }
+
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
-    val only = args.drop(2).toSet // optional query-name filter (local iteration)
+    val selected = SparkEntry.select(args.drop(2).toSeq)
     // Scale-sweep exclusions (e.g. q96 at x100: its 2.2 GB full dump is
     // discarded by tools/scale_sweep.py's own protocol — the check runs as
     // a derived count via graft.CountPeek instead, so dumping it only
@@ -68,83 +123,23 @@ object Verify {
         } else Set.empty
       } catch { case _: Exception => Set.empty }
     val excluded = exclude ++ autoExclude
-    new java.io.File(outDir).mkdirs()
-    // Disk-budget guard (VERDICT r9 #7): round 9 lost its headline x100
-    // artifact to mid-dump ENOSPC that surfaced only as task deaths. Fail
-    // fast BEFORE a dump when free space on the output device drops below
-    // the floor, with the remedy named. Floor default 4 GiB ≈ 2× the
-    // largest observed per-query dump at x100 (q44, ~1.9 GB before the
-    // q96 exclusion existed); override with SPARK_GRAFT_MIN_FREE_GB.
-    val minFreeBytes =
-      sys.env.getOrElse("SPARK_GRAFT_MIN_FREE_GB", "4").toDouble * (1L << 30)
-    def diskGuard(name: String): Unit = {
-      val free = new java.io.File(outDir).getUsableSpace
-      if (free < minFreeBytes) {
-        System.err.println(
-          f"[verify] ABORT before $name: ${free / 1e9}%.1f GB free on the " +
-          f"output device < ${minFreeBytes / 1e9}%.1f GB floor. Remedy: free " +
-          "space (e.g. delete a regenerable /root/scale corpus — " +
-          "tools/scale_up.py rebuilds one in minutes — or a stale dump dir), " +
-          "or lower SPARK_GRAFT_MIN_FREE_GB if the projection is known-small. " +
-          "Aborting the whole run so a partial dump can't read as complete.")
-        spark.stop()
-        sys.exit(3)
-      }
+    val runs = selected.collect { case (name, fn) if !excluded(name) =>
+      name -> (() => fn(spark, sfDir))
     }
-    SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => (only.isEmpty || only(name)) && !excluded(name) }
-      .foreach { case (name, fn) =>
-      val t0 = System.nanoTime()
-      diskGuard(name)
-      try {
-        // coalesce(1) keeps the driver-protocol single-file layout; at
-        // ×1000 a 95M-row result through one write task is the bottleneck,
-        // so the scale sweeps set SPARK_GRAFT_DUMP_COALESCE=0 and let
-        // hash_check glob the multi-file directory.
-        // snapshot BEFORE fn: the builders materialize graftCkpt() stages
-        // inside fn, and those shuffles belong to the query's cost
-        val (w0, r0, s0) = (shufW.get, shufR.get, spill.get)
-        val df0 = fn(spark, sfDir)
-        val df = if (sys.env.get("SPARK_GRAFT_DUMP_COALESCE").contains("0")) df0
-                 else df0.coalesce(1)
-        df.write.mode("overwrite").parquet(s"$outDir/$name")
-        System.err.println(f"[verify] $name ok in ${(System.nanoTime() - t0) / 1e9}%.1fs")
-        if (metricsOn) {
-          Thread.sleep(1000) // let the async listener bus drain (best-effort)
-          System.err.println(f"[verify] $name metrics~ shuffle_write=${shufW.get - w0}%,d " +
-            f"shuffle_read=${shufR.get - r0}%,d disk_spill=${spill.get - s0}%,d bytes")
-        }
-      } catch { case scala.util.control.NonFatal(e) =>
-        // fatal JVM errors (OOM etc.) must abort the dump, not surface as
-        // one misleading per-query failure line (the FuzzVerify fix)
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
+    try dump(spark, outDir, runs, SparkEntry.oracleSql)
+    catch { case e: DiskFloor =>
+      System.err.println(e.getMessage)
+      spark.stop()
+      sys.exit(3)
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // Record skips in the report (ADVICE r10): a skipped query must read
     // as SKIPPED downstream, not be silently absent from the dump dir.
-    if (excluded.nonEmpty) {
-      val skipJson = excluded.toSeq.sorted.map { n =>
+    if (excluded.nonEmpty)
+      writeJson(s"$outDir/skipped.json", excluded.map { n =>
         val why = if (autoExclude(n)) "clone-corpus autodetect"
                   else "SPARK_GRAFT_VERIFY_EXCLUDE"
-        s"${q(n)}: ${q(s"skipped ($why); checked by derived count per tools/scale_sweep.py")}"
-      }.mkString("{", ",", "}")
-      Files.writeString(Paths.get(s"$outDir/skipped.json"), skipJson)
-    }
+        n -> s"skipped ($why); checked by derived count per tools/scale_sweep.py"
+      }.toMap)
     spark.stop()
     // post-stop totals are exact: SparkContext.stop flushes the listener bus
     if (metricsOn)

@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.BitwiseCount
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, Generate, Join, LogicalPlan}
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -77,6 +79,22 @@ class HammingJoinSpec extends AnyFunSuite {
     assert(got.toSet === Set((1L, 3L), (1L, 5L), (3L, 5L)))
   }
 
+  test("the residual is the banded join's own condition, with no Filter directly above it") {
+    mkTable()
+    val plan = spark.sql(naive).queryExecution.optimizedPlan
+    def banded(p: LogicalPlan): Boolean = p match {
+      case j: Join => j.collect { case g: Generate => g }
+        .exists(_.generatorOutput.exists(_.name == "__l_bv"))
+      case _ => false
+    }
+    val joins = plan.collect { case j: Join if banded(j) => j }
+    assert(joins.size === 1, plan)
+    assert(joins.head.condition.exists(_.exists(_.isInstanceOf[BitwiseCount])),
+      s"the bit_count bound must be evaluated in the join:\n$plan")
+    assert(plan.collect { case f @ Filter(_, j: Join) if banded(j) => f }.isEmpty,
+      s"a Filter sits directly above the banded join:\n$plan")
+  }
+
   test("joins with an existing equi-key are left alone") {
     mkTable()
     val q =
@@ -118,15 +136,26 @@ class HammingJoinSpec extends AnyFunSuite {
       val sf = "/root/testdata/sf0.01"
       Engine.prepare(fresh, sf)
       val q45 = "q45_dedup_simhash"
-      // the shared session's answer first: an entry's reclaim drops the
-      // previous entry's views, and the plan below reads fresh's q45_g
-      val want = SparkEntry.queries(q45)(spark, sf).collect().toSeq
-      assert(SparkEntry.queries(q45)(fresh, sf).collect().toSeq === want)
+      val sc = spark.sparkContext
+      val before = sc.getPersistentRDDs.keySet
+      val got = SparkEntry.queries(q45)(fresh, sf).collect().toSeq
+      val freshBlocks = sc.getPersistentRDDs.keySet -- before
+      assert(freshBlocks.nonEmpty, "q45 checkpoints its sketch groups")
+      assert(SparkEntry.queries(q45)(spark, sf).collect().toSeq === got)
+      // reclaim is per session: the shared session's entry run left
+      // fresh's checkpoint blocks in place, and the plan below still
+      // resolves fresh's q45_g view
+      assert(freshBlocks.subsetOf(sc.getPersistentRDDs.keySet))
       val banded = fresh.sql(Pipeline.simhashContentPairSql).queryExecution.optimizedPlan.collect {
-        case g: org.apache.spark.sql.catalyst.plans.logical.Generate
-            if g.generatorOutput.exists(_.name == "__l_bv") => g
+        case g: Generate if g.generatorOutput.exists(_.name == "__l_bv") => g
       }
       assert(banded.size === 1, s"expected one banded join, got ${banded.size}")
+      // and a reclaim on fresh still frees exactly its own
+      val sharedBlocks = sc.getPersistentRDDs.keySet -- before -- freshBlocks
+      Engine.reclaim(fresh)
+      assert((freshBlocks intersect sc.getPersistentRDDs.keySet).isEmpty)
+      assert(sharedBlocks.subsetOf(sc.getPersistentRDDs.keySet))
+      assert(!fresh.catalog.tableExists("q45_g"))
     } finally {
       SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()
       savedDefault.foreach(SparkSession.setDefaultSession)
